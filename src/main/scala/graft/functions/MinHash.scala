@@ -178,12 +178,17 @@ object MinHash {
 
   val xxBandsBuilder: Seq[Expression] => Expression =
     exprs => {
+      val usage = s"$XxBandsFunctionName(shingles, num_perm, rows_per_band)"
       require(exprs.length == 3 && exprs(1).foldable && exprs(2).foldable,
-        s"$XxBandsFunctionName(shingles, num_perm, rows_per_band): " +
-          "num_perm and rows_per_band must be literals")
-      XxMinHashBands(exprs.head,
-        exprs(1).eval().asInstanceOf[Number].intValue(),
-        exprs(2).eval().asInstanceOf[Number].intValue())
+        s"$usage: num_perm and rows_per_band must be literals")
+      val numPerm = exprs(1).eval().asInstanceOf[Number].intValue()
+      val rowsPerBand = exprs(2).eval().asInstanceOf[Number].intValue()
+      // the kernel keeps numPerm / rowsPerBand whole bands, so a remainder
+      // would silently drop the trailing permutations
+      require(numPerm > 0 && rowsPerBand > 0 && numPerm % rowsPerBand == 0,
+        s"$usage: num_perm and rows_per_band must be positive and num_perm " +
+          s"divisible by rows_per_band, got ($numPerm, $rowsPerBand)")
+      XxMinHashBands(exprs.head, numPerm, rowsPerBand)
     }
 
   /** xxhash64-family banded MinHash keys of a shingle-array column. */

@@ -66,6 +66,21 @@ object ShingleHashes {
   }
   private val scratch = ThreadLocal.withInitial[Scratch](() => new Scratch)
 
+  /** Largest array length every JVM allocates. */
+  private[functions] val MaxArrayLength = Int.MaxValue - 8
+
+  /** New length for a scratch buffer that must hold `needed` elements: the
+    * next power of two above it (amortised doubling), clamped to
+    * [[MaxArrayLength]] so the doubling never overflows to a negative size.
+    * A need past that limit fails with a named error. */
+  private[functions] def growSize(needed: Int): Int = {
+    if (needed > MaxArrayLength)
+      throw new IllegalArgumentException(
+        s"$FunctionName: a document needs a scratch buffer of $needed elements, " +
+          s"over the JVM array limit of $MaxArrayLength")
+    math.min(Integer.highestOneBit(needed).toLong * 2, MaxArrayLength.toLong).toInt
+  }
+
   private def isTokenByte(b: Byte): Boolean =
     (b >= 'a' && b <= 'z') || (b >= '0' && b <= '9')
 
@@ -80,8 +95,8 @@ object ShingleHashes {
     while (i < len) {
       if (isTokenByte(bytes(i))) {
         if (nTok == s.starts.length) {
-          s.starts = java.util.Arrays.copyOf(s.starts, nTok * 2)
-          s.ends = java.util.Arrays.copyOf(s.ends, nTok * 2)
+          s.starts = java.util.Arrays.copyOf(s.starts, growSize(nTok + 1))
+          s.ends = java.util.Arrays.copyOf(s.ends, growSize(nTok + 1))
         }
         s.starts(nTok) = i
         i += 1
@@ -93,20 +108,20 @@ object ShingleHashes {
     if (nTok < n) return Array.emptyLongArray
     // 2. hash every n-token '_'-joined window from a reused buffer
     val nWin = nTok - n + 1
-    if (s.hashes.length < nWin) s.hashes = new Array[Long](Integer.highestOneBit(nWin) * 2)
+    if (s.hashes.length < nWin) s.hashes = new Array[Long](growSize(nWin))
     var w = 0
     while (w < nWin) {
       var wl = 0
       var t = w
       while (t < w + n) {
         if (t > w) {
-          if (wl == s.win.length) s.win = java.util.Arrays.copyOf(s.win, wl * 2)
+          if (wl == s.win.length) s.win = java.util.Arrays.copyOf(s.win, growSize(wl + 1))
           s.win(wl) = '_'
           wl += 1
         }
         val tl = s.ends(t) - s.starts(t)
         if (wl + tl > s.win.length)
-          s.win = java.util.Arrays.copyOf(s.win, Integer.highestOneBit(wl + tl) * 2)
+          s.win = java.util.Arrays.copyOf(s.win, growSize(wl + tl))
         System.arraycopy(bytes, s.starts(t), s.win, wl, tl)
         wl += tl
         t += 1

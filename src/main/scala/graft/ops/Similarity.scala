@@ -357,10 +357,6 @@ object Similarity {
     history.unionByName(newFlags)
   }
 
-  /** Probe-only alias of [[assignCells]] (tools.ProbeCells). */
-  private[graft] def assignCellsProbe(corpus: DataFrame, k: Int): DataFrame =
-    assignCells(corpus, k, 64)
-
   /** Shared cell assignment for [[semDedup]]/[[cellEdges]]: nearest fixed
     * centroid + precomputed norm, one codegen'd map pass. */
   private def assignCells(corpus: DataFrame, k: Int, dim: Int): DataFrame = {

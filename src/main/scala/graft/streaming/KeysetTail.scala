@@ -18,23 +18,24 @@ import graft.core.{ConnectionConfig, InputConfig, SourceTableConfig}
   * `dbtable` (the sink-side qualification rule, dialect-portable);
   * `update_column`/`primary_key` → `updateColumn`; `select_limit` →
   * `maxRowsPerBatch` (`<= 0` disables paging); `time_format` →
-  * `timeFormat`. LIMIT-less dialects (Derby/Oracle/DB2) get
-  * `FETCH FIRST` page syntax via the adapter. */
+  * `timeFormat`. The sources pick `FETCH FIRST` paging for LIMIT-less
+  * dialects from the url (`JdbcSource.fetchFirstDialect`). */
 object KeysetTail {
+
+  /** The column a table is tailed by: `update_column`, else `primary_key`. */
+  private def updateColumn(t: SourceTableConfig): String =
+    t.updateColumn.orElse(t.primaryKey).getOrElse(
+      sys.error(s"${t.table}: no update_column/primary_key configured " +
+        "(the reference reflects the PK; pass primary_key for PK-less views, in_sql.rb:107-114)"))
 
   def reader(spark: SparkSession, cc: ConnectionConfig, t: SourceTableConfig,
              selectLimit: Int = 500): DataStreamReader = {
-    val upd = t.updateColumn.orElse(t.primaryKey).getOrElse(
-      sys.error(s"${t.table}: no update_column/primary_key configured " +
-        "(the reference reflects the PK; pass primary_key for PK-less views, in_sql.rb:107-114)"))
     var r = spark.readStream.format("keyset-tail")
       .option("url", cc.jdbcUrl)
       .option("dbtable", cc.qualify(t.table))
-      .option("updateColumn", upd)
+      .option("updateColumn", updateColumn(t))
       .option("maxRowsPerBatch", selectLimit.toString)
       .option("timeFormat", t.timeFormat)
-      .option("fetchFirst",
-        Seq("derby", "oracle", "db2").contains(cc.subprotocol).toString)
     cc.username.foreach(u => r = r.option("user", u))
     cc.password.foreach(p => r = r.option("password", p))
     cc.sessionInitStatement.foreach(s => r = r.option("sessionInitStatement", s))
@@ -62,15 +63,10 @@ object KeysetTail {
     var r = spark.readStream.format("keyset-tail-multi")
       .option("url", cc.jdbcUrl)
       .option("maxRowsPerBatch", cfg.selectLimit.toString)
-      .option("fetchFirst",
-        Seq("derby", "oracle", "db2").contains(cc.subprotocol).toString)
     cfg.tables.zipWithIndex.foreach { case (t, i) =>
-      val upd = t.updateColumn.orElse(t.primaryKey).getOrElse(
-        sys.error(s"${t.table}: no update_column/primary_key configured " +
-          "(the reference reflects the PK; pass primary_key for PK-less views, in_sql.rb:107-114)"))
       r = r.option(s"tables.$i.tag", t.resolvedTag(cfg.tagPrefix))
         .option(s"tables.$i.dbtable", cc.qualify(t.table))
-        .option(s"tables.$i.updateColumn", upd)
+        .option(s"tables.$i.updateColumn", updateColumn(t))
         .option(s"tables.$i.timeFormat", t.timeFormat)
     }
     cc.username.foreach(u => r = r.option("user", u))

@@ -72,8 +72,8 @@ import graft.sources.{JdbcSource, Serialize}
   * huge table wanting sub-range parallel reads is the single-table
   * `keyset-tail` source's job (percentile-cut partition planner).
   *
-  * Options: `url` (+ `user`/`password`/`driver`/`sessionInitStatement`/
-  * `fetchFirst`), `maxRowsPerBatch` (per table per poll; `<= 0` reads all
+  * Options: `url` (+ `user`/`password`/`driver`/`sessionInitStatement`),
+  * `maxRowsPerBatch` (per table per poll; `<= 0` reads all
   * available), `readFailureDemoteAfter` (consecutive read-probe failures
   * before a table is demoted; default 3), `reprobeBackoffStart` (initial
   * re-probe backoff in poll cycles for a demoted table, doubling per
@@ -173,13 +173,11 @@ final class KeysetTailMultiTable(props: Map[String, String])
       override def readSchema(): StructType = KeysetTailMulti.EventSchema
       override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream = {
         val url = ci.getOrElse("url", sys.error("keyset-tail-multi requires url"))
-        val ff = ci.get("fetchfirst").map(_.toBoolean).getOrElse(
-          Seq("jdbc:derby", "jdbc:oracle", "jdbc:db2").exists(url.startsWith))
         new KeysetMultiMicroBatchStream(url,
           KeysetTailTable.jdbcProps(ci).asScala.toMap.map {
             case (k, v) => (k.toString, v.toString) },
           KeysetTailMulti.parseSpecs(ci),
-          ci.getOrElse("maxrowsperbatch", "500").toInt, ff,
+          ci.getOrElse("maxrowsperbatch", "500").toInt, JdbcSource.fetchFirstDialect(url),
           ci.getOrElse("readfailuredemoteafter", "3").toInt,
           ci.getOrElse("reprobebackoffstart", "2").toInt)
       }
@@ -583,12 +581,7 @@ final case class KeysetMultiPartition(
     schema: StructType, quotedColumns: Seq[String], quotedUpdCol: String,
     lo: Option[String], hi: String, timeFormat: String,
     pageBound: Int = 0) extends InputPartition {
-  def query: String = {
-    val bounds = lo.map(v =>
-      s"${JdbcSource.sqlLiteral(v)} < $quotedUpdCol AND ").getOrElse("") +
-      s"$quotedUpdCol <= ${JdbcSource.sqlLiteral(hi)}"
-    s"SELECT ${quotedColumns.mkString(", ")} FROM $dbtable WHERE $bounds"
-  }
+  def query: String = JdbcSource.rangeQuery(quotedColumns, dbtable, quotedUpdCol, lo, hi)
 }
 
 final class KeysetMultiReaderFactory extends PartitionReaderFactory {

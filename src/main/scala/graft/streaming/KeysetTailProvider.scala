@@ -34,7 +34,7 @@ final case class ParquetMode(path: String) extends KeysetReadMode
   * composes into its own pushed-down `WHERE upd > lo AND upd <= hi`
   * executed by a PartitionReader over its OWN executor-side connection.
   * `fetchFirst` selects `FETCH FIRST n ROWS ONLY` for LIMIT-less dialects
-  * (Derby/Oracle/DB2). `props` carries credentials / driver /
+  * ([[JdbcSource.fetchFirstDialect]]). `props` carries credentials / driver /
   * sessionInitStatement (applied by [[JdbcSource.connect]]). */
 final case class JdbcMode(url: String, dbtable: String,
     props: Map[String, String], fetchFirst: Boolean) extends KeysetReadMode
@@ -78,7 +78,7 @@ final case class JdbcMode(url: String, dbtable: String,
   * database answers with its index.
   *
   * Options: `path` (parquet mode) OR `url` + `dbtable` (JDBC mode, with
-  * optional `user`/`password`/`driver`/`sessionInitStatement`/`fetchFirst`);
+  * optional `user`/`password`/`driver`/`sessionInitStatement`);
   * `updateColumn` (required; resolved case-insensitively — Derby et al.
   * upper-case identifiers), `maxRowsPerBatch` (default 500; `<= 0` reads
   * all available), `timeFormat` (Ruby strftime, reference default),
@@ -126,11 +126,8 @@ final class KeysetTailTable(schema: StructType, props: Map[String, String])
   private def mode: KeysetReadMode = ci.get("url") match {
     case Some(url) =>
       val dbtable = ci.getOrElse("dbtable", sys.error("keyset-tail JDBC mode requires dbtable"))
-      // FETCH FIRST for LIMIT-less dialects, overridable via the option
-      val ff = ci.get("fetchfirst").map(_.toBoolean).getOrElse(
-        Seq("jdbc:derby", "jdbc:oracle", "jdbc:db2").exists(url.startsWith))
       JdbcMode(url, dbtable, KeysetTailTable.jdbcProps(ci).asScala.toMap.map {
-        case (k, v) => (k.toString, v.toString) }, ff)
+        case (k, v) => (k.toString, v.toString) }, JdbcSource.fetchFirstDialect(url))
     case None => ParquetMode(ci.getOrElse("path",
       sys.error("keyset-tail requires path (parquet) or url+dbtable (JDBC)")))
   }
@@ -487,13 +484,7 @@ final case class KeysetJdbcPartition(
     url: String, dbtable: String, props: Map[String, String],
     columns: Seq[String], updateColumn: String,
     lo: Option[String], hi: String) extends InputPartition {
-  /** The executor-side sub-range query (no ORDER/LIMIT — sub-ranges tile the
-    * batch exactly, and batch assembly has no order contract). */
-  def query: String = {
-    val bounds = lo.map(v => s"${JdbcSource.sqlLiteral(v)} < $updateColumn AND ").getOrElse("") +
-      s"$updateColumn <= ${JdbcSource.sqlLiteral(hi)}"
-    s"SELECT ${columns.mkString(", ")} FROM $dbtable WHERE $bounds"
-  }
+  def query: String = JdbcSource.rangeQuery(columns, dbtable, updateColumn, lo, hi)
 }
 
 /** Executor-side readers: parquet sub-ranges scan the table's files through

@@ -1,29 +1,24 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.{SparkPlan, WholeStageCodegenExec}
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, ShuffledHashJoinExec, SortMergeJoinExec}
 
 import graft.SparkEntry
 
-/** Scratch audit: for every declared query, count equi-join nodes that sit
-  * OUTSIDE WholeStageCodegen in the (pre-AQE) physical plan — the
+/** Audit: for every declared query (or the named ones), count equi-join
+  * nodes that sit OUTSIDE WholeStageCodegen in the physical plan — the
   * least/greatest-constraint-inference trap detector (see CLAUDE.md).
-  * `runMain graft.tools.CodegenAudit <sfDir> [<query> ...]` */
+  * Plans with AQE off: AQE inserts codegen stages only at run time, so an
+  * unexecuted adaptive plan shows every join bare. Prints one `AUDIT` line
+  * per query with bare joins, then `AUDIT_END`.
+  *
+  * `runMain graft.tools.CodegenAudit <sfDir> [<query>...]` */
 object CodegenAudit {
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: CodegenAudit <sfDir> [<query>...]")
     val sfDir = args(0)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = ToolSession()
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
     val names =
       if (args.length > 1) args.drop(1).toSeq
       else SparkEntry.queries.keys.toSeq.sorted
@@ -36,7 +31,6 @@ object CodegenAudit {
           case _: WholeStageCodegenExec => p.children.flatMap(walk(_, true))
           case _: org.apache.spark.sql.execution.InputAdapter =>
             p.children.flatMap(walk(_, false))
-          case a: AdaptiveSparkPlanExec => walk(a.inputPlan, false)
           case j: BroadcastHashJoinExec =>
             (if (inCodegen) Nil else Seq(s"BHJ(${j.joinType})")) ++
               j.children.flatMap(walk(_, inCodegen))

@@ -1,15 +1,14 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 import graft.SparkEntry
 
 /** Batch `.explain("formatted")` capture for the r14 plan deliverables:
   * writes `<outDir>/<query>_<suffix>.txt` for each named declared query
-  * (initial formatted plan + the executed plan after one noop-sink run so
-  * AQE's final shape is visible too).
+  * (initial formatted plan + the executed plan after one run of the same
+  * QueryExecution, so AQE's final shape is visible too; a noop-sink write
+  * would plan and run a separate one and leave this plan unfinalised).
   *
-  * `runMain graft.tools.PlanDump <sfDir> <outDir> <suffix> <query> [...]`
+  * `runMain graft.tools.PlanDump <sfDir> <outDir> <suffix> <query>...`
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
@@ -18,21 +17,13 @@ object PlanDump {
     val outDir = args(1)
     val suffix = args(2)
     val names = args.drop(3).toSeq
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = ToolSession()
     new java.io.File(outDir).mkdirs()
     names.foreach { n =>
       val df = SparkEntry.queries(n)(spark, sfDir)
       val formatted = df.queryExecution.explainString(
         org.apache.spark.sql.execution.FormattedMode)
-      df.write.format("noop").mode("overwrite").save()
+      df.queryExecution.toRdd.foreach(_ => ())
       val executed = df.queryExecution.executedPlan.toString
       java.nio.file.Files.writeString(
         java.nio.file.Paths.get(s"$outDir/${n}_$suffix.txt"),

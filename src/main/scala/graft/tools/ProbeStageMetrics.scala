@@ -1,19 +1,16 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
-
-import graft.SparkEntry
 
 /** Empirical per-stage breakdown for a declared query (guide §1.1's
   * "open the Stages tab" with the UI disabled): a SparkListener collects
   * every completed stage's executor-run time, shuffle read/write bytes and
   * record counts, and the stage name (which carries the operator callsite).
-  * The query runs `reps` times through the noop sink; stages are printed
-  * for the LAST rep (steady state — codegen compiled, page cache warm),
-  * sorted by task time.
+  * The query runs `reps` times through [[ToolSession.timeQuery]] (caches
+  * cleared before each rep); stages are printed for the LAST rep (steady
+  * state — codegen compiled, page cache warm), sorted by task time.
   *
-  * `runMain graft.tools.ProbeStageMetrics <sfDir> <reps> <query> [...]`
+  * `runMain graft.tools.ProbeStageMetrics <sfDir> <reps> <query>...`
   */
 object ProbeStageMetrics {
   def main(args: Array[String]): Unit = {
@@ -21,16 +18,7 @@ object ProbeStageMetrics {
     val sfDir = args(0)
     val reps = args(1).toInt
     val names = args.drop(2).toSeq
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark.range(1000000).selectExpr("sum(id)").collect() // JIT warm
+    val spark = ToolSession()
 
     case class St(name: String, ms: Long, runMs: Long, cpuMs: Long,
                   shRead: Long, shWrite: Long, recIn: Long, recOut: Long,
@@ -53,14 +41,10 @@ object ProbeStageMetrics {
     spark.sparkContext.addSparkListener(listener)
 
     names.foreach { n =>
-      val fn = SparkEntry.queries(n)
       var total = 0.0
       (1 to reps).foreach { r =>
-        graft.ops.Dedup.clearCaches()
         stages.synchronized(stages.clear())
-        val t0 = System.nanoTime()
-        fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        total = (System.nanoTime() - t0) / 1e9
+        total = ToolSession.timeQuery(spark, n, sfDir)
         System.err.println(f"[stages] $n rep $r: $total%.2f s")
       }
       Thread.sleep(1500) // let the listener bus drain the final stage events

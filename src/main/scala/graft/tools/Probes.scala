@@ -3,55 +3,43 @@ package graft.tools
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
-import graft.SparkEntry
-
 /** Machine-checkable scale-probe artifact (round-7 verdict #6): time the
   * named declared queries at TWO fixture scales and write
-  * `{query: {sf_a, sf_b, ratio_pct}}` JSON — the sf0.1 → sf1x stretch
+  * `{query: {a_sec, b_sec, ratio_pct}}` JSON — the sf0.1 → sf1x stretch
   * signal that previously lived only in BASELINE.md prose, emitted as
   * PROBES_r(N).json per round.
   *
   * `runMain graft.tools.Probes <dirA> <dirB> <reps> <outFile> <query>...`
   *
-  * Times are min-of-reps (the probe asks for the contention-free shape,
-  * matching [[ProbeQueries]]); ratio_pct = 100·tB/tA, so a 10× fixture at
-  * a 1000 (= 10×) ratio is exactly linear scaling. Queries are timed
-  * against the noop sink (every output column materialized — the Bench
-  * methodology).
+  * Every rep clears the caches first ([[ToolSession.timeQuery]]). The JSON
+  * holds min-of-reps (the contention-free shape); ratio_pct = 100·tB/tA,
+  * so a 10× fixture at a 1000 (= 10×) ratio is exactly linear scaling.
+  * Each printed line also carries the median of the reps, the number to
+  * decide an A/B on: cross-JVM mins drift on a shared host, so an A/B on
+  * mins alone can invert.
   */
 object Probes {
   def main(args: Array[String]): Unit = {
     require(args.length >= 5, "usage: Probes <dirA> <dirB> <reps> <outFile> <query>...")
     val Array(dirA, dirB, repsS, outFile) = args.take(4)
     val reps = repsS.toInt
+    require(reps >= 1, s"reps must be >= 1, got $reps")
     val names = args.drop(4).toSeq
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark.range(1000000).selectExpr("sum(id)").collect() // JIT warm
+    val spark = ToolSession()
 
-    def time(name: String, dir: String): Double = {
-      val fn = SparkEntry.queries(name)
-      (1 to reps).map { _ =>
-        val t0 = System.nanoTime()
-        fn(spark, dir).write.format("noop").mode("overwrite").save()
-        (System.nanoTime() - t0) / 1e9
-      }.min
+    /** (min, median) seconds over the reps; an even count averages the two
+      * middle samples. */
+    def time(name: String, dir: String): (Double, Double) = {
+      val ts = (1 to reps).map(_ => ToolSession.timeQuery(spark, name, dir)).sorted
+      (ts.head, (ts((reps - 1) / 2) + ts(reps / 2)) / 2)
     }
 
     val rows = names.map { n =>
-      val a = time(n, dirA)
-      val b = time(n, dirB)
+      val (a, aMed) = time(n, dirA)
+      val (b, bMed) = time(n, dirB)
       val ratioPct = math.round(100.0 * b / a)
-      System.err.println(f"[probe] $n%-28s a=$a%7.2f s  b=$b%7.2f s  ratio=${ratioPct / 100.0}%6.2fx")
+      System.err.println(f"[probe] $n%-28s a=$a%7.2f s (med $aMed%7.2f)  " +
+        f"b=$b%7.2f s (med $bMed%7.2f)  ratio=${ratioPct / 100.0}%6.2fx")
       f"""  "$n": {"a_sec": $a%.3f, "b_sec": $b%.3f, "ratio_pct": $ratioPct}"""
     }
     val json =

@@ -64,6 +64,19 @@ class ExtensionsSqlSpec extends SparkSpecBase {
     assert(sigSql === sigCol)
   }
 
+  test("graft_minhash_xx_bands rejects bad band geometry at analysis") {
+    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
+      MinHash.XxBandsFunctionName, MinHash.xxBandsBuilder, "scala_udf")
+    assert(spark.sql("SELECT graft_minhash_xx_bands(array('ab','cd'), 64, 4)")
+      .head.getSeq[Long](0).size === 16)
+    // (64, 5) used to keep 12 bands and drop the last 4 permutations
+    Seq((64, 5), (0, 4), (64, 0), (-8, 4)).foreach { case (numPerm, rowsPerBand) =>
+      val e = intercept[IllegalArgumentException](spark.sql(
+        s"SELECT graft_minhash_xx_bands(array('ab','cd'), $numPerm, $rowsPerBand)"))
+      assert(e.getMessage.contains(MinHash.XxBandsFunctionName), e.getMessage)
+    }
+  }
+
   test("session-extensions installation exposes the functions at session build") {
     // NOTE: the `spark.sql.extensions` CONFIG string is a static conf — it
     // only applies when the SparkContext itself is created, so a test

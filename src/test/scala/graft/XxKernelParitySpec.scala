@@ -109,4 +109,15 @@ class XxKernelParitySpec extends SparkSpecBase {
       .select(col("id"), SimHash.sim64Xx(col("shs")).as("simhash"))
     assert(sims.count() == 1)
   }
+
+  test("ShingleHashes.growSize clamps past 2^30 instead of going negative") {
+    // sizes only: nothing of this length is allocated
+    assert(ShingleHashes.growSize(257) === 512) // the doubling below the clamp
+    val huge = (1 << 30) + 1
+    assert(ShingleHashes.growSize(huge) === ShingleHashes.MaxArrayLength)
+    assert(ShingleHashes.growSize(huge) >= huge)
+    val e = intercept[IllegalArgumentException](
+      ShingleHashes.growSize(ShingleHashes.MaxArrayLength + 1))
+    assert(e.getMessage.contains(ShingleHashes.FunctionName))
+  }
 }
