@@ -25,12 +25,6 @@ object Dedup {
     docs.groupBy(fp.as("fp"))
       .agg(min(col(idCol)).as("keep_id"), count(lit(1)).as("n_copies"))
 
-  /** Deduplicated view: one row per distinct fingerprint (min-id winner). */
-  def dropDuplicatesBy(docs: DataFrame, idCol: String, fp: Column): DataFrame = {
-    val w = Window.partitionBy(fp).orderBy(col(idCol).asc)
-    docs.withColumn("__rn", row_number().over(w)).filter(col("__rn") === 1).drop("__rn")
-  }
-
   /** Per-(input, n) persisted shingle-array reuse via the bounded
     * [[PlanCache]] (LRU + stopped-session eviction): four dedup ops persist
     * the per-doc array scan, and repeated calls in one session share one
@@ -83,14 +77,6 @@ object Dedup {
   /** Per-doc distinct shingles, exploded: (id, shingle). */
   private def explodedShingles(docs: DataFrame, idCol: String, textCol: String, n: Int) =
     shingleArrays(docs, idCol, textCol, n).select(col("id"), explode(col("shs")).as("s"))
-
-  /** Exploded shingles carrying the doc's set size: (id, n_sh, shingle).
-    * Carrying `n_sh` through the explode means downstream Jaccard math needs
-    * no extra join back to a per-doc count table (and no recompute of the
-    * shingle scan branch) — one scan, one shuffle. */
-  private def explodedShinglesWithSize(docs: DataFrame, idCol: String, textCol: String, n: Int) =
-    shingleArrays(docs, idCol, textCol, n)
-      .select(col("id"), size(col("shs")).cast("long").as("n_sh"), explode(col("shs")).as("s"))
 
   /** Tier 2: all pairs with shingle-set Jaccard >= threshold (exact).
     * Output: (id_a, id_b, jaccard) with id_a < id_b, rounded to 6 dp so the

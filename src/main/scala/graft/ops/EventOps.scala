@@ -56,10 +56,6 @@ object EventOps {
     df.withColumn(as, coalesce(parsed, fallback))
   }
 
-  /** Tag assignment (reference `in_sql.rb:69-71`): `tag_prefix.table_tag`. */
-  def assignTag(df: DataFrame, tagPrefix: Option[String], tableTag: String): DataFrame =
-    df.withColumn("tag", lit((tagPrefix.toSeq :+ tableTag).mkString(".")))
-
   /** Tag-prefix strip (reference `out_sql.rb:160-162, 253-259`): anchored
     * removal of `remove_tag_prefix` plus its separating dot. */
   def stripTagPrefix(tagCol: Column, prefix: String): Column = {

@@ -27,9 +27,6 @@ object Exact {
   /** Exact sum of a pre-built decimal expression → double. */
   def decSum(e: Column): Column = round(sum(e), 2).cast("double")
 
-  /** Exact average: exact decimal sum, double division (IEEE, deterministic). */
-  def moneyAvg(c: Column): Column = round(sum(dec(c)), 2).cast("double") / count(lit(1))
-
   /** 1 ± rate as an exact DECIMAL(8,6) term (e.g. discount/tax factors). */
   def onePlus(rate: Column): Column =
     lit(1).cast(DecimalType(8, 6)) + rate.cast(DecimalType(8, 6))

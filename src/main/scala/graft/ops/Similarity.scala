@@ -81,12 +81,6 @@ object Similarity {
     }
   }
 
-  /** Sign-bit bucket signature from `numPlanes` seeded hyperplanes. */
-  def lshBucket(v: Column, numPlanes: Int, dim: Int): Column =
-    (0 until numPlanes).map { p =>
-      when(dot(v, typedLit(planeVec(p, dim))) >= 0, shiftleft(lit(1), p)).otherwise(lit(0))
-    }.reduce((a, b) => a.bitwiseOR(b))
-
   /** IVF-flat approximate top-k: a coarse k-means quantizer (`nList`
     * centroids, seeded — deterministic for a fixed input) partitions the
     * corpus into inverted lists; each query probes its `nProbe` nearest

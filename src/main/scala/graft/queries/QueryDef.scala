@@ -16,6 +16,4 @@ final case class QueryDef(
 object QueryDef {
   def sql(fn: (SparkSession, String) => DataFrame, oracle: String, doc: String = ""): QueryDef =
     QueryDef(fn, Some(oracle), doc)
-  def rowsOnly(fn: (SparkSession, String) => DataFrame, doc: String = ""): QueryDef =
-    QueryDef(fn, None, doc)
 }

@@ -44,28 +44,34 @@ object JdbcSource {
     s"SELECT ${columns.mkString(", ")} FROM $table WHERE $bounds"
   }
 
-  /** `SELECT * FROM t WHERE upd > ? ORDER BY upd ASC LIMIT n` pushed into
-    * the remote DB (`in_sql.rb:129-135`). `fetchFirstSyntax` covers
-    * LIMIT-less dialects ([[fetchFirstDialect]]). */
+  /** The page-limit clause: `FETCH FIRST n ROWS ONLY` for LIMIT-less
+    * dialects ([[fetchFirstDialect]]), `LIMIT n` otherwise. */
+  def pageLimit(n: Int, fetchFirst: Boolean): String =
+    if (fetchFirst) s"FETCH FIRST $n ROWS ONLY" else s"LIMIT $n"
+
+  /** The keyset page `SELECT cols FROM t WHERE upd > last ORDER BY upd ASC
+    * LIMIT n` (`in_sql.rb:129-135`); `limit <= 0` disables the limit
+    * (`in_sql.rb:52`). ORDER BY only when a LIMIT defines the page through
+    * it: an unbounded page is the whole remaining range, and its
+    * aggregation/sub-range consumers don't need order — leaving the ORDER BY
+    * in would make unindexed databases sort the full remainder per poll for
+    * nothing (planners are NOT guaranteed to elide a subquery ORDER BY). */
+  def pageQuery(select: String, table: String, updateColumn: String,
+                last: Option[String], limit: Int, fetchFirst: Boolean): String = {
+    val where = last.map(v => s"WHERE $updateColumn > ${sqlLiteral(v)}").getOrElse("")
+    if (limit <= 0) s"SELECT $select FROM $table $where"
+    else s"SELECT $select FROM $table $where ORDER BY $updateColumn ASC " +
+      pageLimit(limit, fetchFirst)
+  }
+
+  /** [[pageQuery]] pushed INTO the remote DB as Spark's JDBC dbtable
+    * subquery, so the database's index answers it. `fetchFirstSyntax`
+    * covers LIMIT-less dialects ([[fetchFirstDialect]]). */
   def keysetPage(spark: SparkSession, url: String, table: String, updateColumn: String,
                  last: Option[String], limit: Int, props: Properties = new Properties(),
-                 fetchFirstSyntax: Boolean = false): DataFrame = {
-    val where = last.map(v => s"WHERE $updateColumn > ${sqlLiteral(v)}").getOrElse("")
-    // ORDER BY only when a LIMIT defines the page through it: an unbounded
-    // page (`limit <= 0` disables the LIMIT, in_sql.rb:52) is the whole
-    // remaining range, and its aggregation/sub-range consumers don't need
-    // order — leaving the ORDER BY in would make unindexed databases sort
-    // the full remainder per poll for nothing (planners are NOT guaranteed
-    // to elide a subquery ORDER BY).
-    val sub =
-      if (limit <= 0) s"(SELECT * FROM $table $where) page"
-      else {
-        val limitClause =
-          if (fetchFirstSyntax) s"FETCH FIRST $limit ROWS ONLY" else s"LIMIT $limit"
-        s"(SELECT * FROM $table $where ORDER BY $updateColumn ASC $limitClause) page"
-      }
-    spark.read.jdbc(url, sub, props)
-  }
+                 fetchFirstSyntax: Boolean = false): DataFrame =
+    spark.read.jdbc(url,
+      s"(${pageQuery("*", table, updateColumn, last, limit, fetchFirstSyntax)}) page", props)
 
   /** `all_tables` discovery via JDBC catalog metadata, skipping system
     * tables (`in_sql.rb:214-230`, skip `in_sql.rb:183`). Catalog listing is

@@ -33,8 +33,7 @@ final class KeysetTailRunner(
   val activeTables: Seq[SourceTableConfig] = cfg.tables.filter { t =>
     try {
       val df = loadTable(spark, t.table)
-      t.updateColumn.orElse(t.primaryKey).exists(df.columns.contains) ||
-        (t.updateColumn.isEmpty && t.primaryKey.isEmpty && false)
+      t.updateColumn.orElse(t.primaryKey).exists(df.columns.contains)
     } catch { case NonFatal(_) => false }
   }
 

@@ -1,7 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.types._
 
 import graft.core.RubyStrftime
@@ -10,14 +9,6 @@ import graft.core.RubyStrftime
   * (`in_sql.rb:87-96, 141`): the keyset resume value is taken from THIS
   * serialized form, so timestamps resume from their formatted string. */
 object Serialize {
-
-  def serializedCol(df: DataFrame, name: String,
-                    rubyTimeFormat: String = RubyStrftime.DefaultRubyFormat): Column =
-    df.schema(name).dataType match {
-      case TimestampType | TimestampNTZType =>
-        date_format(col(name), RubyStrftime.toSparkPattern(rubyTimeFormat))
-      case _ => col(name).cast(StringType)
-    }
 
   /** Zone used for driver-side timestamp rendering — must agree with the
     * Spark-side `date_format` path (which uses the session timezone), or

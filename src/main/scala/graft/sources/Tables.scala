@@ -178,14 +178,8 @@ object Tables {
     * applied (see [[widen]] — no-op once the scan itself is ≥ cores wide). */
   def documentsWide(spark: SparkSession, sfDir: String): DataFrame =
     widen(documents(spark, sfDir), "doc_id")
-  def eventsWide(spark: SparkSession, sfDir: String): DataFrame =
-    widen(events(spark, sfDir), "event_id")
   def embeddingsWide(spark: SparkSession, sfDir: String): DataFrame =
     widen(embeddings(spark, sfDir), "vec_id")
-  def lineitemWide(spark: SparkSession, sfDir: String): DataFrame =
-    widen(lineitem(spark, sfDir), "l_orderkey")
-  def ordersWide(spark: SparkSession, sfDir: String): DataFrame =
-    widen(orders(spark, sfDir), "o_orderkey")
 
   /** `all_tables` discovery over a directory of parquet tables, skipping
     * system tables (`in_sql.rb:214-230`). For a JDBC catalog the same

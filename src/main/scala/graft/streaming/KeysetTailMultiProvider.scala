@@ -5,17 +5,13 @@ import java.util
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.catalyst.util.ArrayBasedMapData
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder}
+import org.apache.spark.sql.connector.read.{InputPartition, PartitionReaderFactory, Scan, ScanBuilder}
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, SupportsAdmissionControl}
 import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
-import org.apache.spark.unsafe.types.UTF8String
 
 import graft.core.RubyStrftime
 import graft.sources.{JdbcSource, Serialize}
@@ -67,10 +63,13 @@ import graft.sources.{JdbcSource, Serialize}
   * probe per ADVANCING table, all on ONE cached driver connection
   * validated at cycle start (`in_sql.rb:259-265`), and each advanced table
   * becomes ONE executor-side partition reading its (lo, hi] range over
-  * its own connection. Scale note: this source is the MANY-TABLES
-  * coordinator (its per-table page is `select_limit`-bounded); a single
-  * huge table wanting sub-range parallel reads is the single-table
-  * `keyset-tail` source's job (percentile-cut partition planner).
+  * its own connection — the shared JDBC keyset cursor ([[KeysetJdbc]]:
+  * [[KeysetRange]] read by [[KeysetRangeReader]] in the event shape), the
+  * same cursor the single-table `keyset-tail` source reads through.
+  * Scale note: this source is the MANY-TABLES coordinator (its per-table
+  * page is `select_limit`-bounded); a single huge table wanting sub-range
+  * parallel reads is the single-table `keyset-tail` source's job
+  * (percentile-cut partition planner).
   *
   * Options: `url` (+ `user`/`password`/`driver`/`sessionInitStatement`),
   * `maxRowsPerBatch` (per table per poll; `<= 0` reads all
@@ -112,34 +111,6 @@ object KeysetTailMulti {
   final case class ResolvedTable(spec: TableSpec, schema: StructType,
                                  updCol: String, updType: DataType)
 
-  /** Dialects whose string→TIMESTAMP cast REJECTS a zone suffix in a
-    * comparison literal (round-11 trap: Derby accepts
-    * `'2024-01-01 00:00:01.000000'` but errors on `…+0000`, and equally on
-    * a `%Z` zone NAME like ` UTC`). A timestamp/date update column
-    * serialized through a zone-bearing `time_format` produces exactly such
-    * a literal the moment the first boundary re-enters the page query — so
-    * the misconfiguration must fail AT STREAM CONSTRUCTION, naming the
-    * table and the fix, not rows-deep into the first batch (r12 verdict
-    * #8). Detection is [[RubyStrftime.hasZoneDirective]] — `%z` (any `:`
-    * variant) AND `%Z`, skipping escaped `%%z` (ADVICE r13). */
-  def zoneSuffixUnsupported(url: String): Boolean =
-    url.startsWith("jdbc:derby")
-
-  /** Throws IllegalArgumentException when (updType, timeFormat, dialect)
-    * combine into the first-boundary failure above. Shared by both keyset
-    * providers. */
-  def guardZoneSuffix(url: String, table: String, updCol: String,
-                      updType: DataType, timeFormat: String): Unit =
-    if ((updType == TimestampType || updType == DateType) &&
-        zoneSuffixUnsupported(url) &&
-        RubyStrftime.hasZoneDirective(timeFormat))
-      throw new IllegalArgumentException(
-        s"table '$table': update column '$updCol' is ${updType.simpleString} " +
-          s"and time_format '$timeFormat' carries a %z/%Z zone suffix, which this " +
-          "dialect rejects when the serialized boundary re-enters the database " +
-          "cast (the first page/resume query fails). Configure a zone-less " +
-          "time_format for this table, e.g. '%Y-%m-%d %H:%M:%S.%6N'.")
-
   def parseSpecs(ci: Map[String, String]): Seq[TableSpec] = {
     val specs = Iterator.from(0)
       .map(i => (i, ci.get(s"tables.$i.tag"), ci.get(s"tables.$i.dbtable"),
@@ -173,9 +144,7 @@ final class KeysetTailMultiTable(props: Map[String, String])
       override def readSchema(): StructType = KeysetTailMulti.EventSchema
       override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream = {
         val url = ci.getOrElse("url", sys.error("keyset-tail-multi requires url"))
-        new KeysetMultiMicroBatchStream(url,
-          KeysetTailTable.jdbcProps(ci).asScala.toMap.map {
-            case (k, v) => (k.toString, v.toString) },
+        new KeysetMultiMicroBatchStream(url, KeysetJdbc.connOptions(ci),
           KeysetTailMulti.parseSpecs(ci),
           ci.getOrElse("maxrowsperbatch", "500").toInt, JdbcSource.fetchFirstDialect(url),
           ci.getOrElse("readfailuredemoteafter", "3").toInt,
@@ -229,12 +198,6 @@ final class KeysetMultiMicroBatchStream(url: String, connProps: Map[String, Stri
   private def warn(msg: String): Unit =
     System.err.println(s"[graft.keyset-tail-multi] $msg")
 
-  private def jprops: java.util.Properties = {
-    val p = new java.util.Properties()
-    connProps.foreach { case (k, v) => p.put(k, v) }
-    p
-  }
-
   /** ONE cached driver-side connection per stream, validated at cycle
     * start — the reference holds one ActiveRecord connection across its
     * poll loop with a liveness check/reconnect at cycle start
@@ -257,7 +220,7 @@ final class KeysetMultiMicroBatchStream(url: String, connProps: Map[String, Stri
     else {
       if (c != null) graft.sinks.JdbcSink.cleanupQuietly(c.close())
       try {
-        val nc = JdbcSource.connect(url, jprops)
+        val nc = JdbcSource.connect(url, KeysetJdbc.properties(connProps))
         cachedConn = nc
         if (c != null) warn("driver connection was dead; reconnected (in_sql.rb:259-265)")
         Some(nc)
@@ -271,8 +234,10 @@ final class KeysetMultiMicroBatchStream(url: String, connProps: Map[String, Stri
     }
   }
 
-  private def quoted(name: String): String =
-    org.apache.spark.sql.jdbc.JdbcDialects.get(url).quoteIdentifier(name)
+  /** Table `t`'s `(lo, hi]` range in the event shape. */
+  private def range(t: ResolvedTable, lo: Option[String], hi: String): KeysetRange =
+    KeysetJdbc.range(url, t.spec.dbtable, connProps, t.schema, t.updCol, lo, hi,
+      Some(KeysetRange.Event(t.spec.tag, t.spec.timeFormat, maxRowsPerBatch)))
 
   // the multi source emits ONE partition per advanced table per batch —
   // right for the reference's select_limit-bounded poll loop, but a
@@ -289,11 +254,8 @@ final class KeysetMultiMicroBatchStream(url: String, connProps: Map[String, Stri
   private val live: Seq[ResolvedTable] = {
     val resolved = specs.flatMap { s =>
       try {
-        val sch = spark.read.jdbc(url, s.dbtable, jprops).schema
-        val upd = sch.fields
-          .collectFirst { case f if f.name.equalsIgnoreCase(s.updateColumn) => f.name }
-          .getOrElse(sys.error(
-            s"updateColumn '${s.updateColumn}' not in ${sch.fieldNames.mkString(",")}"))
+        val sch = spark.read.jdbc(url, s.dbtable, KeysetJdbc.properties(connProps)).schema
+        val upd = KeysetJdbc.updateColumn(sch, s.updateColumn)
         Some(ResolvedTable(s, sch, upd, sch(upd).dataType))
       } catch {
         case scala.util.control.NonFatal(e) =>
@@ -307,7 +269,7 @@ final class KeysetMultiMicroBatchStream(url: String, connProps: Map[String, Stri
     // config errors fail the STREAM (outside the per-table drop rescue): a
     // %z-bearing time_format on a timestamp column of a zone-less dialect
     // would otherwise fail rows-deep into the first batch (r12 verdict #8)
-    resolved.foreach(t => KeysetTailMulti.guardZoneSuffix(
+    resolved.foreach(t => KeysetJdbc.guardZoneSuffix(
       url, t.spec.dbtable, t.updCol, t.updType, t.spec.timeFormat))
     resolved
   }
@@ -359,13 +321,13 @@ final class KeysetMultiMicroBatchStream(url: String, connProps: Map[String, Stri
     * narrows the window, the restart path closes it. */
   private def readProbeOk(conn: java.sql.Connection, t: ResolvedTable,
                           lo: Option[String], hi: String): Boolean = {
-    val part = KeysetMultiPartition(t.spec.tag, url, t.spec.dbtable, connProps,
-      t.schema, t.schema.fieldNames.toSeq.map(quoted), quoted(t.updCol),
-      lo, hi, t.spec.timeFormat)
-    val one = if (fetchFirst) "FETCH FIRST 1 ROWS ONLY" else "LIMIT 1"
     try {
       val st = conn.createStatement()
-      try { val rs = st.executeQuery(s"${part.query} $one"); rs.close() }
+      try {
+        val rs = st.executeQuery(
+          s"${range(t, lo, hi).query} ${JdbcSource.pageLimit(1, fetchFirst)}")
+        rs.close()
+      }
       finally st.close()
       readFailures.remove(t.spec.tag)
       if (demoted.remove(t.spec.tag).isDefined)
@@ -415,31 +377,17 @@ final class KeysetMultiMicroBatchStream(url: String, connProps: Map[String, Stri
     * the same strict-`>` tie-group contract as the batch runner. */
   private def pollBoundary(conn: java.sql.Connection, t: ResolvedTable,
                            last: Option[String]): Option[String] = {
-    val u = quoted(t.updCol)
-    val where = last.map(v => s"WHERE $u > ${JdbcSource.sqlLiteral(v)}").getOrElse("")
-    val sql =
-      if (maxRowsPerBatch <= 0)
-        s"SELECT MAX($u) FROM ${t.spec.dbtable} $where"
-      else {
-        val lim = if (fetchFirst) s"FETCH FIRST $maxRowsPerBatch ROWS ONLY"
-                  else s"LIMIT $maxRowsPerBatch"
-        s"SELECT MAX(page_u) FROM (SELECT $u AS page_u FROM ${t.spec.dbtable} " +
-          s"$where ORDER BY $u ASC $lim) page"
-      }
+    val u = KeysetJdbc.quote(url, t.updCol)
+    val page = JdbcSource.pageQuery(s"$u AS page_u", t.spec.dbtable, u, last,
+      maxRowsPerBatch, fetchFirst)
+    val sql = s"SELECT MAX(page_u) FROM ($page) page"
     val st = conn.createStatement()
     try {
       val rs = st.executeQuery(sql)
       try {
         if (!rs.next()) None
-        else {
-          val v = t.updType match {
-            case TimestampType => rs.getTimestamp(1)
-            case DateType      => rs.getDate(1)
-            case _             => rs.getObject(1)
-          }
-          if (rs.wasNull() || v == null) None
-          else Some(Serialize.valueToString(t.updType, v, t.spec.timeFormat))
-        }
+        else Option(KeysetJdbc.get(rs, 1, t.updType))
+          .map(Serialize.valueToString(t.updType, _, t.spec.timeFormat))
       } finally rs.close()
     } finally st.close()
   }
@@ -553,123 +501,18 @@ final class KeysetMultiMicroBatchStream(url: String, connProps: Map[String, Stri
       val lo = s.getOrElse(t.spec.tag, None)
       val hi = e.getOrElse(t.spec.tag, None)
       hi match {
-        case Some(h) if lo != hi =>
-          Some(KeysetMultiPartition(t.spec.tag, url, t.spec.dbtable, connProps,
-            t.schema, t.schema.fieldNames.toSeq.map(quoted),
-            quoted(t.updCol), lo, h, t.spec.timeFormat,
-            maxRowsPerBatch): InputPartition)
+        case Some(h) if lo != hi => Some(range(t, lo, h): InputPartition)
         case _ => None // table did not advance this batch
       }
     }.toArray
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new KeysetMultiReaderFactory
+    new KeysetRangeReaderFactory
 
   override def stop(): Unit = {
     val c = cachedConn
     cachedConn = null
     if (c != null) graft.sinks.JdbcSink.cleanupQuietly(c.close())
   }
-}
-
-/** One advanced table's (lo, hi] page of one micro-batch: bounds travel as
-  * serialized strings (the single-table JDBC mode's contract) and the
-  * reader serializes each row to the tagged-event shape executor-side. */
-final case class KeysetMultiPartition(
-    tag: String, url: String, dbtable: String, props: Map[String, String],
-    schema: StructType, quotedColumns: Seq[String], quotedUpdCol: String,
-    lo: Option[String], hi: String, timeFormat: String,
-    pageBound: Int = 0) extends InputPartition {
-  def query: String = JdbcSource.rangeQuery(quotedColumns, dbtable, quotedUpdCol, lo, hi)
-}
-
-final class KeysetMultiReaderFactory extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-    new KeysetMultiReader(partition.asInstanceOf[KeysetMultiPartition])
-}
-
-/** Executor-side reader: one connection, one range query, each row
-  * serialized per §1.2 (`Serialize.valueToString` field-wise; NULL fields
-  * absent) into `(tag, record)`. */
-final class KeysetMultiReader(p: KeysetMultiPartition)
-    extends PartitionReader[InternalRow] {
-  private val props = {
-    val pr = new java.util.Properties()
-    p.props.foreach { case (k, v) => pr.put(k, v) }
-    pr
-  }
-  Option(props.getProperty("driver")).foreach(java.lang.Class.forName)
-  private val conn = JdbcSource.connect(p.url, props)
-  conn.setAutoCommit(false) // cursor-mode fetch, same as KeysetJdbcReader
-  private val stmt = conn.createStatement()
-  stmt.setFetchSize(1000)
-  private val rs = stmt.executeQuery(p.query)
-  private val fields = p.schema.fields
-  private val tagU = UTF8String.fromString(p.tag)
-
-  private def readField(i: Int): Any = {
-    val v = fields(i).dataType match {
-      case TimestampType  => rs.getTimestamp(i + 1)
-      case DateType       => rs.getDate(i + 1)
-      case _: DecimalType => rs.getBigDecimal(i + 1)
-      case BinaryType     => rs.getBytes(i + 1)
-      case _              => rs.getObject(i + 1)
-    }
-    if (rs.wasNull()) null else v
-  }
-
-  private var current: InternalRow = _
-  private var rowCount = 0L
-  override def next(): Boolean = {
-    val h = rs.next()
-    if (h) {
-      rowCount += 1
-      val keys = scala.collection.mutable.ArrayBuffer.empty[Any]
-      val vals = scala.collection.mutable.ArrayBuffer.empty[Any]
-      var i = 0
-      while (i < fields.length) {
-        val v = readField(i)
-        if (v != null) { // NULL fields absent, rowToStringMap semantics
-          keys += UTF8String.fromString(fields(i).name)
-          vals += UTF8String.fromString(
-            Serialize.valueToString(fields(i).dataType, v, p.timeFormat))
-        }
-        i += 1
-      }
-      current = new GenericInternalRow(
-        Array[Any](tagU, ArrayBasedMapData(keys.toArray, vals.toArray)))
-    }
-    h
-  }
-  override def get(): InternalRow = current
-  override def close(): Unit = {
-    // Tie-inflation observability (r13 verdict "what's wrong" #2): the
-    // page bound is VALUE-based (MAX over the LIMIT-ed page) while this
-    // range read has no LIMIT, so a coarse update column (second-granular
-    // timestamps under heavy writes) makes whole tie groups travel in one
-    // batch. The count only exists where the rows flow — this reader IS
-    // the table's entire batch (one partition per advanced table) — so the
-    // documented hazard is warned HERE, in production executor logs,
-    // instead of living only in scaladoc. Offsets stay exact either way.
-    if (p.pageBound > 0 && rowCount > 2L * p.pageBound) {
-      KeysetMultiReader.tieInflation.put(p.tag, rowCount)
-      System.err.println(s"[graft.keyset-tail-multi] TIE INFLATION: table " +
-        s"'${p.tag}' emitted $rowCount rows against a page bound of " +
-        s"${p.pageBound} — update column '${p.quotedUpdCol}' is too coarse " +
-        "(tie groups travel whole under the strict-> contract); use a " +
-        "finer or unique update column")
-    }
-    graft.sinks.JdbcSink.cleanupQuietly(rs.close())
-    graft.sinks.JdbcSink.cleanupQuietly(stmt.close())
-    graft.sinks.JdbcSink.cleanupQuietly(conn.close())
-  }
-}
-
-object KeysetMultiReader {
-  /** Last tie-inflated batch row count per tag — executor-local by nature
-    * (the count exists only where the partition runs); the authoritative
-    * signal is the reader's stderr warning, this map is local-mode/spec
-    * observability. */
-  val tieInflation = new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
 }

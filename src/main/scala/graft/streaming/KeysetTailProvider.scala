@@ -7,7 +7,6 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.TypeUtils
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
@@ -32,10 +31,11 @@ final case class ParquetMode(path: String) extends KeysetReadMode
   * database (which has the documented index on the update column,
   * `README.md:100-102`), and each input partition's value sub-range
   * composes into its own pushed-down `WHERE upd > lo AND upd <= hi`
-  * executed by a PartitionReader over its OWN executor-side connection.
-  * `fetchFirst` selects `FETCH FIRST n ROWS ONLY` for LIMIT-less dialects
-  * ([[JdbcSource.fetchFirstDialect]]). `props` carries credentials / driver /
-  * sessionInitStatement (applied by [[JdbcSource.connect]]). */
+  * executed by the shared [[KeysetRangeReader]] over its OWN executor-side
+  * connection. `fetchFirst` selects `FETCH FIRST n ROWS ONLY` for
+  * LIMIT-less dialects ([[JdbcSource.fetchFirstDialect]]). `props` carries
+  * credentials / driver / sessionInitStatement ([[KeysetJdbc.connOptions]],
+  * applied by [[JdbcSource.connect]]). */
 final case class JdbcMode(url: String, dbtable: String,
     props: Map[String, String], fetchFirst: Boolean) extends KeysetReadMode
 
@@ -73,9 +73,11 @@ final case class JdbcMode(url: String, dbtable: String,
   * content even if the cut positions differ. Each sub-range's bounds are
   * pushed into ITS OWN read: parquet readers get per-partition
   * `GreaterThan`/`LessThanOrEqual` filters (row-group pruning confines each
-  * reader to data that can match — not just the page range); JDBC readers
-  * compose `upd > lo AND upd <= hi` into the executor-side query the
-  * database answers with its index.
+  * reader to data that can match — not just the page range); JDBC
+  * sub-ranges are [[KeysetRange]]s of the shared JDBC keyset cursor
+  * ([[KeysetJdbc]], the same one `keyset-tail-multi` reads through), whose
+  * reader composes `upd > lo AND upd <= hi` into the executor-side query
+  * the database answers with its index.
   *
   * Options: `path` (parquet mode) OR `url` + `dbtable` (JDBC mode, with
   * optional `user`/`password`/`driver`/`sessionInitStatement`);
@@ -90,28 +92,13 @@ class KeysetTailProvider extends TableProvider with DataSourceRegister {
 
   override def inferSchema(options: CaseInsensitiveStringMap): StructType =
     if (options.containsKey("url"))
-      SparkSession.active.read.jdbc(options.get("url"),
-        options.get("dbtable"), KeysetTailTable.jdbcProps(
-          options.asCaseSensitiveMap().asScala.toMap)).schema
+      SparkSession.active.read.jdbc(options.get("url"), options.get("dbtable"),
+        KeysetJdbc.properties(options.asCaseSensitiveMap().asScala.toMap)).schema
     else SparkSession.active.read.parquet(options.get("path")).schema
 
   override def getTable(schema: StructType, partitioning: Array[Transform],
                         properties: util.Map[String, String]): Table =
     new KeysetTailTable(schema, properties.asScala.toMap)
-}
-
-object KeysetTailTable {
-  /** JDBC connection properties from source options: everything Spark's own
-    * JDBC source honors that a raw DriverManager connection needs too. */
-  def jdbcProps(options: Map[String, String]): java.util.Properties = {
-    val ci = options.map { case (k, v) => k.toLowerCase -> v }
-    val p = new java.util.Properties()
-    ci.get("user").foreach(p.put("user", _))
-    ci.get("password").foreach(p.put("password", _))
-    ci.get("driver").foreach(p.put("driver", _))
-    ci.get("sessioninitstatement").foreach(p.put("sessionInitStatement", _))
-    p
-  }
 }
 
 final class KeysetTailTable(schema: StructType, props: Map[String, String])
@@ -126,8 +113,7 @@ final class KeysetTailTable(schema: StructType, props: Map[String, String])
   private def mode: KeysetReadMode = ci.get("url") match {
     case Some(url) =>
       val dbtable = ci.getOrElse("dbtable", sys.error("keyset-tail JDBC mode requires dbtable"))
-      JdbcMode(url, dbtable, KeysetTailTable.jdbcProps(ci).asScala.toMap.map {
-        case (k, v) => (k.toString, v.toString) }, JdbcSource.fetchFirstDialect(url))
+      JdbcMode(url, dbtable, KeysetJdbc.connOptions(ci), JdbcSource.fetchFirstDialect(url))
     case None => ParquetMode(ci.getOrElse("path",
       sys.error("keyset-tail requires path (parquet) or url+dbtable (JDBC)")))
   }
@@ -203,18 +189,8 @@ final class KeysetMicroBatchStream(schema: StructType, mode: KeysetReadMode,
     extends MicroBatchStream with SupportsAdmissionControl {
 
   private def spark = SparkSession.active
-  // JDBC dialects upper-case identifiers (Derby: event_id -> EVENT_ID);
-  // resolve the configured name against the inferred schema once.
-  private val updCol: String = schema.fields
-    .collectFirst { case f if f.name.equalsIgnoreCase(updateColumn) => f.name }
-    .getOrElse(sys.error(s"keyset-tail: updateColumn '$updateColumn' not in ${schema.fieldNames.mkString(",")}"))
+  private val updCol: String = KeysetJdbc.updateColumn(schema, updateColumn)
   private val updType: DataType = schema(updCol).dataType
-
-  /** Dialect-quoted identifier for raw JDBC SQL: Spark-written tables carry
-    * case-sensitive (quoted) column names, so unquoted references would
-    * resolve to the dialect's upper-cased form and miss them. */
-  private def quoted(url: String, name: String): String =
-    org.apache.spark.sql.jdbc.JdbcDialects.get(url).quoteIdentifier(name)
 
   // The reference documents an index on the update column as a deployment
   // prerequisite (README.md:100-102). Without one, EVERY poll's page query
@@ -224,9 +200,8 @@ final class KeysetMicroBatchStream(schema: StructType, mode: KeysetReadMode,
   // failures — views, restricted catalogs — stay silent).
   mode match {
     case JdbcMode(url, dbtable, props, _) if !dbtable.trim.startsWith("(") =>
-      val p = new java.util.Properties()
-      props.foreach { case (k, v) => p.put(k, v) }
-      if (JdbcSource.hasIndexOn(url, dbtable, updCol, p).contains(false))
+      if (JdbcSource.hasIndexOn(url, dbtable, updCol,
+            KeysetJdbc.properties(props)).contains(false))
         System.err.println(s"[graft.keyset-tail] no index leads with " +
           s"'$updCol' on $dbtable: every poll will sort the remaining table " +
           "in the database (README.md:100-102 requires an update-column index)")
@@ -239,7 +214,7 @@ final class KeysetMicroBatchStream(schema: StructType, mode: KeysetReadMode,
   // fail at stream construction instead, naming the table and the fix.
   mode match {
     case JdbcMode(url, dbtable, _, _) =>
-      KeysetTailMulti.guardZoneSuffix(url, dbtable, updCol, updType, rubyTimeFormat)
+      KeysetJdbc.guardZoneSuffix(url, dbtable, updCol, updType, rubyTimeFormat)
     case _ => ()
   }
 
@@ -251,9 +226,8 @@ final class KeysetMicroBatchStream(schema: StructType, mode: KeysetReadMode,
       KeysetScan.scan(spark.read.schema(schema).parquet(path), updCol, last,
         limit, rubyTimeFormat = rubyTimeFormat)
     case JdbcMode(url, dbtable, props, ff) =>
-      val p = new java.util.Properties()
-      props.foreach { case (k, v) => p.put(k, v) }
-      JdbcSource.keysetPage(spark, url, dbtable, quoted(url, updCol), last, limit, p, ff)
+      JdbcSource.keysetPage(spark, url, dbtable, KeysetJdbc.quote(url, updCol), last,
+        limit, KeysetJdbc.properties(props), ff)
   }
 
   override def initialOffset(): Offset = KeysetOffset(None)
@@ -452,9 +426,7 @@ final class KeysetMicroBatchStream(schema: StructType, mode: KeysetReadMode,
         val his = serCuts :+ e.last.get
         val los: Vector[Option[String]] = s.last +: his.init.map(Some(_))
         los.zip(his).map { case (lo, hi) =>
-          KeysetJdbcPartition(url, dbtable, props,
-            schema.fieldNames.toSeq.map(quoted(url, _)),
-            quoted(url, updCol), lo, hi): InputPartition
+          KeysetJdbc.range(url, dbtable, props, schema, updCol, lo, hi): InputPartition
         }.toArray
     }
   }
@@ -475,30 +447,17 @@ final case class KeysetRangePartition(
     lo: Option[Any], hi: Any,
     readFunc: PartitionedFile => Iterator[InternalRow]) extends InputPartition
 
-/** A value sub-range of one micro-batch in JDBC mode: SERIALIZED `(lo, hi]`
-  * bounds that compose into the executor-side page query — the reader opens
-  * its own connection and the database (with its update-column index,
-  * `README.md:100-102`) answers `upd > lo AND upd <= hi` exactly. Carries
-  * NO rows and no driver-side state beyond the bound strings. */
-final case class KeysetJdbcPartition(
-    url: String, dbtable: String, props: Map[String, String],
-    columns: Seq[String], updateColumn: String,
-    lo: Option[String], hi: String) extends InputPartition {
-  def query: String = JdbcSource.rangeQuery(columns, dbtable, updateColumn, lo, hi)
-}
-
 /** Executor-side readers: parquet sub-ranges scan the table's files through
   * the shipped read function (vectorized, sub-range row-group pruning) and
-  * re-filter per record for exactness; JDBC sub-ranges run their composed
-  * query over the reader's own connection (the database's comparison is the
-  * source of truth — no residual filter). Iterators auto-close at
+  * re-filter per record for exactness; JDBC sub-ranges are read by the
+  * shared [[KeysetRangeReader]] (typed shape). Iterators auto-close at
   * exhaustion; rows follow the DSv2 contract (valid until next `next()`). */
 final class KeysetReaderFactory(schema: StructType, updateColumn: String)
     extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
     partition match {
       case p: KeysetRangePartition => parquetReader(p)
-      case p: KeysetJdbcPartition  => new KeysetJdbcReader(schema, p)
+      case p: KeysetRange          => new KeysetRangeReader(p)
     }
 
   private def parquetReader(p: KeysetRangePartition): PartitionReader[InternalRow] = {
@@ -524,70 +483,5 @@ final class KeysetReaderFactory(schema: StructType, updateColumn: String)
       override def get(): InternalRow = current
       override def close(): Unit = ()
     }
-  }
-}
-
-/** Executor-side JDBC sub-range reader: one connection, one ResultSet,
-  * typed per-field conversion to InternalRow driven by the Catalyst schema
-  * Spark's own JDBC dialect inferred (so getter and type always agree). */
-final class KeysetJdbcReader(schema: StructType, p: KeysetJdbcPartition)
-    extends PartitionReader[InternalRow] {
-  private val props = {
-    val pr = new java.util.Properties()
-    p.props.foreach { case (k, v) => pr.put(k, v) }
-    pr
-  }
-  // executors don't run DriverManager's service discovery for drivers
-  // loaded after JVM start — honor an explicit driver class like Spark does
-  Option(props.getProperty("driver")).foreach(java.lang.Class.forName)
-  private val conn = JdbcSource.connect(p.url, props)
-  // cursor-mode fetch: a limit<=0 batch's sub-range can hold cnt/cap rows,
-  // and buffering drivers (pgjdbc with autocommit, most defaults) would
-  // materialize the whole range in executor memory. autocommit OFF +
-  // a fetch size is the portable way to stream instead (the read-only
-  // txn's implicit rollback at close is harmless).
-  conn.setAutoCommit(false)
-  private val stmt = conn.createStatement()
-  stmt.setFetchSize(1000)
-  private val rs = stmt.executeQuery(p.query)
-  private val fields = schema.fields
-  private val converters =
-    fields.map(f => CatalystTypeConverters.createToCatalystConverter(f.dataType))
-
-  private def readField(i: Int): Any = {
-    val v = fields(i).dataType match {
-      case LongType       => rs.getLong(i + 1)
-      case IntegerType    => rs.getInt(i + 1)
-      case ShortType      => rs.getShort(i + 1)
-      case ByteType       => rs.getByte(i + 1)
-      case DoubleType     => rs.getDouble(i + 1)
-      case FloatType      => rs.getFloat(i + 1)
-      case BooleanType    => rs.getBoolean(i + 1)
-      case StringType     => rs.getString(i + 1)
-      case TimestampType  => rs.getTimestamp(i + 1)
-      case DateType       => rs.getDate(i + 1)
-      case _: DecimalType => rs.getBigDecimal(i + 1)
-      case BinaryType     => rs.getBytes(i + 1)
-      case _              => rs.getObject(i + 1)
-    }
-    if (rs.wasNull()) null else converters(i)(v)
-  }
-
-  private var current: InternalRow = _
-  override def next(): Boolean = {
-    val h = rs.next()
-    if (h) {
-      val vals = new Array[Any](fields.length)
-      var i = 0
-      while (i < fields.length) { vals(i) = readField(i); i += 1 }
-      current = new GenericInternalRow(vals)
-    }
-    h
-  }
-  override def get(): InternalRow = current
-  override def close(): Unit = {
-    graft.sinks.JdbcSink.cleanupQuietly(rs.close())
-    graft.sinks.JdbcSink.cleanupQuietly(stmt.close())
-    graft.sinks.JdbcSink.cleanupQuietly(conn.close())
   }
 }

@@ -11,7 +11,8 @@ import java.nio.file.{Files, Paths}
   *
   * `runMain graft.tools.Probes <dirA> <dirB> <reps> <outFile> <query>...`
   *
-  * Every rep clears the caches first ([[ToolSession.timeQuery]]). The JSON
+  * Every rep clears the caches first ([[ToolSession.timeQuery]]). Each
+  * query runs once untimed per scale, then its reps alternate A, B. The JSON
   * holds min-of-reps (the contention-free shape); ratio_pct = 100·tB/tA,
   * so a 10× fixture at a 1000 (= 10×) ratio is exactly linear scaling.
   * Each printed line also carries the median of the reps, the number to
@@ -27,16 +28,23 @@ object Probes {
     val names = args.drop(4).toSeq
     val spark = ToolSession()
 
-    /** (min, median) seconds over the reps; an even count averages the two
-      * middle samples. */
-    def time(name: String, dir: String): (Double, Double) = {
-      val ts = (1 to reps).map(_ => ToolSession.timeQuery(spark, name, dir)).sorted
+    /** (min, median) of samples; an even count averages the two middle
+      * ones. */
+    def stats(samples: Seq[Double]): (Double, Double) = {
+      val ts = samples.sorted
       (ts.head, (ts((reps - 1) / 2) + ts(reps / 2)) / 2)
     }
 
     val rows = names.map { n =>
-      val (a, aMed) = time(n, dirA)
-      val (b, bMed) = time(n, dirB)
+      // one untimed run per scale, then A/B-interleaved reps: the JVM's
+      // warm-up (class loading, JIT) keeps paying off over the first
+      // reps, and timing one scale's reps before the other's charged it
+      // to whichever scale came first
+      Seq(dirA, dirB).foreach(ToolSession.timeQuery(spark, n, _))
+      val pairs = (1 to reps).map(_ =>
+        (ToolSession.timeQuery(spark, n, dirA), ToolSession.timeQuery(spark, n, dirB)))
+      val (a, aMed) = stats(pairs.map(_._1))
+      val (b, bMed) = stats(pairs.map(_._2))
       val ratioPct = math.round(100.0 * b / a)
       System.err.println(f"[probe] $n%-28s a=$a%7.2f s (med $aMed%7.2f)  " +
         f"b=$b%7.2f s (med $bMed%7.2f)  ratio=${ratioPct / 100.0}%6.2fx")

@@ -162,6 +162,29 @@ class MultiTailSpec extends SparkSpecBase {
     assert(got.asScala.toSet === Set("v9"))
   }
 
+  test("multi-tail records carry a CLOB column's text, not the driver's LOB handle") {
+    import graft.core.{ConnectionConfig, InputConfig, SourceTableConfig}
+    exec("CREATE TABLE mt_clob (id BIGINT NOT NULL PRIMARY KEY, body CLOB)")
+    val texts = (1 to 3).map(i => s"clob body $i: " + ("x" * (i * 40)))
+    texts.zipWithIndex.foreach { case (t, i) =>
+      exec(s"INSERT INTO mt_clob VALUES (${i + 1}, '$t')") }
+    val cc = ConnectionConfig(adapter = "derby",
+      database = "memory:graftmt12;create=true")
+    val cfg = InputConfig(tables = Seq(
+      SourceTableConfig("mt_clob", updateColumn = Some("id"))), selectLimit = 10)
+    val cp = java.nio.file.Files.createTempDirectory("graft_mt_clob_cp").toString
+    val got = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val q = graft.streaming.KeysetTail.multiReader(spark, cc, cfg).load()
+      .writeStream
+      .foreachBatch { (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
+        b.collect().foreach(r => got.add(r.getMap[String, String](1)("BODY")))
+      }
+      .option("checkpointLocation", cp).start()
+    try q.processAllAvailable() finally q.stop()
+    import scala.jdk.CollectionConverters._
+    assert(got.asScala.toSet === texts.toSet)
+  }
+
   test("non-live tables keep their offsets: init-dropped at restart, held while others advance, resumed on recovery (in_sql.rb:280-307)") {
     import graft.core.{ConnectionConfig, InputConfig, SourceTableConfig}
     exec("CREATE TABLE mt_p (id BIGINT NOT NULL PRIMARY KEY, v VARCHAR(20))")
@@ -262,7 +285,7 @@ class MultiTailSpec extends SparkSpecBase {
       assert(o3.asInstanceOf[KeysetMultiOffset].last("pool") === Some("8"))
       val parts = stream.planInputPartitions(o1, o3)
       assert(parts.length === 1)
-      assert(parts(0).asInstanceOf[graft.streaming.KeysetMultiPartition].lo === Some("5"),
+      assert(parts(0).asInstanceOf[graft.streaming.KeysetRange].lo === Some("5"),
         "recovered table resumes strictly past the held boundary")
     } finally stream.stop()
   }
@@ -318,7 +341,7 @@ class MultiTailSpec extends SparkSpecBase {
 
   test("demoted table RE-PROMOTES itself: backoff re-probe recovers the table without restart, resuming from its held offset (r13 verdict missing #1; in_sql.rb:272-275)") {
     import org.apache.spark.sql.connector.read.streaming.ReadLimit
-    import graft.streaming.{KeysetMultiMicroBatchStream, KeysetMultiOffset, KeysetMultiReaderFactory, KeysetTailMulti}
+    import graft.streaming.{KeysetMultiMicroBatchStream, KeysetMultiOffset, KeysetRangeReaderFactory, KeysetTailMulti}
     exec("CREATE TABLE mt_h1 (id BIGINT NOT NULL PRIMARY KEY, a VARCHAR(10), b VARCHAR(10))")
     exec("CREATE TABLE mt_h2 (id BIGINT NOT NULL PRIMARY KEY, w VARCHAR(10))")
     (1 to 3).foreach { i =>
@@ -364,11 +387,11 @@ class MultiTailSpec extends SparkSpecBase {
         s"recovered table must re-promote: ${stream.demoted}")
       assert(last(o6)("h1") === Some("6"))
       val part = stream.planInputPartitions(o5, o6).collectFirst {
-        case p: graft.streaming.KeysetMultiPartition if p.tag == "h1" => p }
+        case p: graft.streaming.KeysetRange if p.tag == "h1" => p }
       assert(part.exists(_.lo === Some("3")),
         s"must resume from the held offset, not replay 1..3: $part")
       // rows actually flow through the recovered reader
-      val rdr = new KeysetMultiReaderFactory().createReader(part.get)
+      val rdr = new KeysetRangeReaderFactory().createReader(part.get)
       val ids = scala.collection.mutable.Set.empty[String]
       try while (rdr.next())
         ids += rdr.get().getMap(1).keyArray().array.map(_.toString)
@@ -381,7 +404,7 @@ class MultiTailSpec extends SparkSpecBase {
 
   test("tie inflation past the page bound is counted at the reader and WARNED (coarse update column); offsets stay exact") {
     import org.apache.spark.sql.connector.read.streaming.ReadLimit
-    import graft.streaming.{KeysetMultiMicroBatchStream, KeysetMultiOffset, KeysetMultiReader, KeysetMultiReaderFactory, KeysetTailMulti}
+    import graft.streaming.{KeysetMultiMicroBatchStream, KeysetMultiOffset, KeysetRangeReader, KeysetRangeReaderFactory, KeysetTailMulti}
     exec("CREATE TABLE mt_tie (upd BIGINT NOT NULL, v VARCHAR(10))")
     (1 to 50).foreach(i => exec(s"INSERT INTO mt_tie VALUES (1, 'v$i')"))
     val stream = new KeysetMultiMicroBatchStream(url, Map.empty,
@@ -396,21 +419,21 @@ class MultiTailSpec extends SparkSpecBase {
       assert(o1.asInstanceOf[KeysetMultiOffset].last("tie") === Some("1"))
       val parts = stream.planInputPartitions(o0, o1)
       assert(parts.length === 1)
-      val rdr = new KeysetMultiReaderFactory().createReader(parts(0))
+      val rdr = new KeysetRangeReaderFactory().createReader(parts(0))
       var n = 0
       try while (rdr.next()) n += 1 finally rdr.close()
       assert(n === 50, "whole tie group travels (strict-> contract, no split)")
       // the reader observed >2x the page bound and warned (the documented
       // coarse-update-column hazard, r13 verdict what's-wrong #2)
-      assert(KeysetMultiReader.tieInflation.get("tie") === 50L,
-        s"inflation must be recorded: ${KeysetMultiReader.tieInflation}")
+      assert(KeysetRangeReader.tieInflation.get("tie") === 50L,
+        s"inflation must be recorded: ${KeysetRangeReader.tieInflation}")
       // offsets stay EXACT through the inflated batch: nothing re-emits,
       // and later fine-grained rows flow normally
       (1 to 5).foreach(i => exec(s"INSERT INTO mt_tie VALUES (2, 'w$i')"))
       val o2 = stream.latestOffset(o1, ReadLimit.allAvailable())
       assert(o2.asInstanceOf[KeysetMultiOffset].last("tie") === Some("2"))
       val p2 = stream.planInputPartitions(o1, o2)
-      val rdr2 = new KeysetMultiReaderFactory().createReader(p2(0))
+      val rdr2 = new KeysetRangeReaderFactory().createReader(p2(0))
       var n2 = 0
       try while (rdr2.next()) n2 += 1 finally rdr2.close()
       assert(n2 === 5, "exactly the new rows — no duplicate, no loss")
@@ -566,7 +589,7 @@ class MultiTailSpec extends SparkSpecBase {
         assert(o3.asInstanceOf[KeysetMultiOffset].last("r1") === Some("6"))
         val replay = s3.planInputPartitions(o2, o3)
         val r1Part = replay.collectFirst {
-          case p: graft.streaming.KeysetMultiPartition if p.tag == "r1" => p }
+          case p: graft.streaming.KeysetRange if p.tag == "r1" => p }
         assert(r1Part.exists(_.lo.isEmpty),
           s"recovered table must re-read from the rewound start: $r1Part")
       } finally s3.stop()

@@ -10,7 +10,7 @@ import org.apache.spark.sql.streaming.Trigger
 
 import graft.core.{InputConfig, SourceTableConfig}
 import graft.sources.{FileStateStore, KeysetTailRunner, Tables}
-import graft.streaming.{JdbcMode, KeysetJdbcPartition, KeysetMicroBatchStream, KeysetOffset, ParquetMode}
+import graft.streaming.{JdbcMode, KeysetRange, KeysetMicroBatchStream, KeysetOffset, ParquetMode}
 
 /** Round-11 guards: the JDBC read mode of the keyset-tail streaming source
   * (the reference's actual RDBMS-tail scenario, `in_sql.rb:129-135`),
@@ -61,7 +61,7 @@ class Round11OpsSpec extends SparkSpecBase {
     val parts = jd.planInputPartitions(o0, o1)
     assert(parts.length === 4) // 1000-row page / 250 per partition
     parts.foreach { p =>
-      val jp = p.asInstanceOf[KeysetJdbcPartition]
+      val jp = p.asInstanceOf[KeysetRange]
       // serialized bound strings only — no rows, no typed payloads
       jp.productIterator.foreach(f => assert(!f.isInstanceOf[org.apache.spark.sql.Row]))
       assert(jp.query.startsWith("SELECT "))
