@@ -125,12 +125,16 @@ object JdbcSource {
   private def hasSessionInit(props: Properties): Boolean =
     props.getProperty("sessionInitStatement") != null
 
-  /** Raw connection honoring the Spark-style `sessionInitStatement`
-    * property — Spark's JDBC reader runs it after opening a session; the
-    * metadata/sink paths open their own connections, so the same statement
-    * (e.g. `SET search_path TO ...` / `SET SCHEMA ...` from
-    * `ConnectionConfig.schemaSearchPath`) is applied here too. */
+  /** Raw connection honoring the Spark-style `driver` and
+    * `sessionInitStatement` properties, the one raw-JDBC opener of the
+    * source, tail and sink paths. Executors don't run DriverManager's
+    * service discovery for drivers loaded after JVM start, so an explicit
+    * driver class is loaded first, as Spark does. Spark's JDBC reader runs
+    * the init statement after opening a session; the connections opened
+    * here get the same statement (e.g. `SET search_path TO ...` /
+    * `SET SCHEMA ...` from `ConnectionConfig.schemaSearchPath`). */
   private[graft] def connect(url: String, props: Properties): Connection = {
+    Option(props.getProperty("driver")).foreach(java.lang.Class.forName)
     val conn = DriverManager.getConnection(url, props)
     Option(props.getProperty("sessionInitStatement")).foreach { stmt =>
       Using.resource(conn.createStatement())(_.execute(stmt))

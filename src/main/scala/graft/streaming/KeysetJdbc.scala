@@ -150,11 +150,7 @@ final class KeysetRangeReaderFactory extends PartitionReaderFactory {
   * No residual filter: the database's comparison is the source of truth.
   * Rows follow the DSv2 contract (valid until the next `next()`). */
 final class KeysetRangeReader(p: KeysetRange) extends PartitionReader[InternalRow] {
-  private val props = KeysetJdbc.properties(p.props)
-  // executors don't run DriverManager's service discovery for drivers
-  // loaded after JVM start — honor an explicit driver class like Spark does
-  Option(props.getProperty("driver")).foreach(java.lang.Class.forName)
-  private val conn = JdbcSource.connect(p.url, props)
+  private val conn = JdbcSource.connect(p.url, KeysetJdbc.properties(p.props))
   // cursor-mode fetch: a limit<=0 batch's range can hold the whole table
   // remainder, and buffering drivers (pgjdbc with autocommit, most
   // defaults) would materialize it in executor memory. autocommit OFF + a

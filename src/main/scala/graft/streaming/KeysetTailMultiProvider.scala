@@ -157,24 +157,10 @@ final class KeysetTailMultiTable(props: Map[String, String])
   * determinism. A tag absent from the map has not emitted yet (≙ the
   * reference's state file holding no entry for the table). */
 final case class KeysetMultiOffset(last: Map[String, Option[String]]) extends Offset {
-  override def json(): String =
-    last.toSeq.sortBy(_._1).map { case (tag, v) =>
-      "\"" + KeysetOffset.escape(tag) + "\":" +
-        v.map(s => "\"" + KeysetOffset.escape(s) + "\"").getOrElse("null")
-    }.mkString("{", ",", "}")
+  override def json(): String = KeysetOffset.writeJson(last.toSeq.sortBy(_._1))
 }
 object KeysetMultiOffset {
-  private val Pair =
-    "\"((?:[^\"\\\\]|\\\\.)*)\"\\s*:\\s*(null|\"(?:[^\"\\\\]|\\\\.)*\")".r
-  def fromJson(s: String): KeysetMultiOffset =
-    KeysetMultiOffset(Pair.findAllMatchIn(s).map { m =>
-      val tag = KeysetOffset.unescape(m.group(1))
-      val v = m.group(2) match {
-        case "null" => None
-        case quoted => Some(KeysetOffset.unescape(quoted.substring(1, quoted.length - 1)))
-      }
-      tag -> v
-    }.toMap)
+  def fromJson(s: String): KeysetMultiOffset = KeysetMultiOffset(KeysetOffset.parseJson(s))
 }
 
 object KeysetMultiMicroBatchStream {

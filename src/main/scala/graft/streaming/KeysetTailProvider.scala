@@ -132,21 +132,37 @@ final class KeysetTailTable(schema: StructType, props: Map[String, String])
 }
 
 /** Offset = serialized last update-column value (None before the first row).
-  *
-  * `json()` must stay ONE LINE: Spark's offset log is line-oriented, so a
-  * raw newline inside the value (legal in a string update column) would
-  * corrupt the checkpoint. Control characters are JSON-escaped, and
-  * `fromJson` unescapes in a single pass (sequential `replace` calls
-  * mis-handle adjacent escapes like a literal backslash-n). */
+  * Its JSON is the one-key case of [[KeysetMultiOffset]]'s:
+  * `{"last":"v"}` / `{"last":null}`, through the same codec. */
 final case class KeysetOffset(last: Option[String]) extends Offset {
-  override def json(): String = last match {
-    case Some(v) => "{\"last\":\"" + KeysetOffset.escape(v) + "\"}"
-    case None    => "{\"last\":null}"
-  }
+  override def json(): String = KeysetOffset.writeJson(Seq("last" -> last))
 }
 object KeysetOffset {
-  /** One-line JSON string escaping shared with [[KeysetMultiOffset]]. */
-  private[streaming] def escape(v: String): String = {
+  /** The one offset codec of both tails: a flat JSON object of string keys
+    * to a string or `null`, keys in the given order.
+    *
+    * The JSON must stay ONE LINE: Spark's offset log is line-oriented, so a
+    * raw newline inside a value (legal in a string update column) would
+    * corrupt the checkpoint. Control characters are JSON-escaped, and
+    * [[parseJson]] unescapes in a single pass (sequential `replace` calls
+    * mis-handle adjacent escapes like a literal backslash-n). */
+  private[streaming] def writeJson(pairs: Seq[(String, Option[String])]): String =
+    pairs.map { case (k, v) =>
+      "\"" + escape(k) + "\":" + v.map(s => "\"" + escape(s) + "\"").getOrElse("null")
+    }.mkString("{", ",", "}")
+
+  private val Pair =
+    "\"((?:[^\"\\\\]|\\\\.)*)\"\\s*:\\s*(null|\"(?:[^\"\\\\]|\\\\.)*\")".r
+  private[streaming] def parseJson(s: String): Map[String, Option[String]] =
+    Pair.findAllMatchIn(s).map { m =>
+      val v = m.group(2) match {
+        case "null" => None
+        case quoted => Some(unescape(quoted.substring(1, quoted.length - 1)))
+      }
+      unescape(m.group(1)) -> v
+    }.toMap
+
+  private def escape(v: String): String = {
     val sb = new StringBuilder(v.length + 8)
     v.foreach {
       case '\\' => sb.append("\\\\")
@@ -159,7 +175,7 @@ object KeysetOffset {
     }
     sb.toString
   }
-  private[streaming] def unescape(s: String): String = {
+  private def unescape(s: String): String = {
     val sb = new StringBuilder(s.length)
     var i = 0
     while (i < s.length) {
@@ -177,10 +193,7 @@ object KeysetOffset {
     }
     sb.toString
   }
-  def fromJson(s: String): KeysetOffset = {
-    val m = "\"last\"\\s*:\\s*\"((?:[^\"\\\\]|\\\\.)*)\"".r.findFirstMatchIn(s)
-    KeysetOffset(m.map(g => unescape(g.group(1))))
-  }
+  def fromJson(s: String): KeysetOffset = KeysetOffset(parseJson(s).get("last").flatten)
 }
 
 final class KeysetMicroBatchStream(schema: StructType, mode: KeysetReadMode,

@@ -40,17 +40,24 @@ class DeadLetterSpec extends SparkSpecBase {
     import spark.implicits._
     // every row poisoned: without the cap this collects the whole page
     val df = (1L to 40L).map(i => (i, s"too-long-$i")).toDF("id", "v").coalesce(1)
-    val dead = graft.sinks.JdbcSink.idempotentUpsert(df, url, "ups13cap", Seq("id"),
-      maxDeadLettersPerPartition = 5).collect()
-    // 5 materialized + 1 overflow marker — never 40 rows on the driver
-    assert(dead.length === 6, dead.mkString("; "))
-    val (markers, letters) = dead.partition(_.isNullAt(0))
-    assert(letters.length === 5)
-    assert(letters.forall(_.getString(1).startsWith("deterministic:")))
-    assert(markers.length === 1)
-    assert(markers(0).getString(1).contains("35 additional"),
-      s"exact suppressed count must be reportable: ${markers(0).getString(1)}")
-    assert(spark.read.jdbc(url, "ups13cap", noProps).count() === 0)
+    // the cap belongs to the partition writer both row-wise paths share
+    Seq[(String, () => org.apache.spark.sql.DataFrame)](
+      "idempotentUpsert" -> (() => graft.sinks.JdbcSink.idempotentUpsert(df, url,
+        "ups13cap", Seq("id"), maxDeadLettersPerPartition = 5)),
+      "resilientAppend" -> (() => graft.sinks.JdbcSink.resilientAppend(df, url,
+        "ups13cap", maxDeadLettersPerPartition = 5))
+    ).foreach { case (path, write) =>
+      val dead = write().collect()
+      // 5 materialized + 1 overflow marker — never 40 rows on the driver
+      assert(dead.length === 6, s"$path: ${dead.mkString("; ")}")
+      val (markers, letters) = dead.partition(_.isNullAt(0))
+      assert(letters.length === 5, path)
+      assert(letters.forall(_.getString(1).startsWith("deterministic:")), path)
+      assert(markers.length === 1, path)
+      assert(markers(0).getString(1).contains("35 additional"),
+        s"$path: exact suppressed count must be reportable: ${markers(0).getString(1)}")
+      assert(spark.read.jdbc(url, "ups13cap", noProps).count() === 0, path)
+    }
   }
 
   test("upsertStream: poisoned record lands in the dead-letter TABLE while the batch commits") {

@@ -125,6 +125,28 @@ class PgDialectSpec extends SparkSpecBase {
     assert(spark.read.jdbc(url, cc.qualify("ups_dead"), cc.properties).count() === 2)
   }
 
+  test("routed-write fallback connects with the caller's properties: connect timeout and currentSchema reach the row-wise path") {
+    fixture
+    import graft.core.{OutputConfig, SinkTableConfig}
+    import spark.implicits._
+    execPlain("CREATE TABLE pgapp.fb_pg (id BIGINT NOT NULL PRIMARY KEY, msg VARCHAR(20))")
+    execPlain("INSERT INTO pgapp.fb_pg VALUES (2, 'dup')") // the bulk write hits the PK
+    val cfg = OutputConfig(routes = Seq.empty,
+      defaultTable = SinkTableConfig("", "fb_pg", "id,msg"))
+    val batch = Seq((1L, "a", "any.tag"), (2L, "b", "any.tag"), (3L, "c", "any.tag"))
+      .toDF("id", "msg", "tag")
+    val dead = JdbcSink.writeRouted(batch, cfg, cc, batchSize = 10)
+    // the row-wise fallback opened the last connection: it must carry the
+    // config's properties, not just credentials
+    assert(PgShimDriver.lastConnectTimeout === Some("5"))
+    assert(PgShimDriver.lastCurrentSchema === Some("pgapp"))
+    assert(dead.keySet === Set(cc.qualify("fb_pg")))
+    assert(dead(cc.qualify("fb_pg")).count() === 1) // the duplicate key
+    val landed = spark.read.jdbc(url, cc.qualify("fb_pg"), cc.properties)
+      .collect().map(_.getLong(0)).toSet
+    assert(landed === Set(1L, 2L, 3L))
+  }
+
   test("fetchsize reaches the driver (pgjdbc's cursor-paging prerequisite)") {
     fixture
     val df = spark.read

@@ -412,6 +412,23 @@ class Round11OpsSpec extends SparkSpecBase {
       assert(KeysetOffset.fromJson(j) === o, s"round-trip failed for ${v.toList}: $j")
     }
     assert(KeysetOffset.fromJson(KeysetOffset(None).json()) === KeysetOffset(None))
+    // golden bytes: the offset log written by earlier checkpoints must
+    // keep parsing, and new offsets must keep their exact form
+    Seq(
+      "" -> """{"last":""}""",
+      "\\n" -> """{"last":"\\n"}""",
+      "\\" -> """{"last":"\\"}""",
+      "\"" -> """{"last":"\""}""",
+      "a\nb" -> """{"last":"a\nb"}""",
+      "\r\n" -> """{"last":"\r\n"}""",
+      "\\\"" -> """{"last":"\\\""}""",
+      "\\\\n" -> """{"last":"\\\\n"}"""
+    ).foreach { case (v, golden) =>
+      assert(KeysetOffset(Some(v)).json() === golden, s"offset bytes changed for ${v.toList}")
+      assert(KeysetOffset.fromJson(golden) === KeysetOffset(Some(v)), golden)
+    }
+    assert(KeysetOffset(None).json() === """{"last":null}""")
+    assert(KeysetOffset.fromJson("""{"last":null}""") === KeysetOffset(None))
   }
 
   test("index introspection: keyset page prerequisite detectable per README.md:100-102") {
