@@ -88,7 +88,8 @@ object WinnowFingerprints {
 
 /** Portable-hash winnowing as ONE native pass per document: the same
   * md5-derived 28-bit gram hashes, rightmost-window-min selection, and
-  * distinct-value output as `Dedup.winnowFingerprintsPortableRelational`
+  * distinct-value output as the test-side referee
+  * `Referees.winnowFingerprintsPortableRelational`
   * (whose formulation the DuckDB oracle mirrors) — but computed in a tight
   * JVM loop instead of a per-gram explode + md5 column + window exchange.
   * At sf0.1 that removes a ~1.5M-row shuffle and sort per query.

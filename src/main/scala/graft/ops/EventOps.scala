@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.core.{OutputConfig, RubyStrftime, TagPattern}
+import graft.core.{OutputConfig, RubyStrftime, SinkTableConfig, TagPattern}
 import graft.core.Materialize.StageOps
 
 /** The event-pipeline projections: serialization/coercion, event-time
@@ -75,17 +75,8 @@ object EventOps {
   /** Route and write each chunk to its table (batch shape of the reference's
     * per-chunk flush). Returns per-table DataFrames, pruned through each
     * route's column mapping. */
-  def routedTables(df: DataFrame, cfg: OutputConfig): Map[String, DataFrame] = {
-    val stripped = df.withColumn("tag",
-      cfg.removeTagPrefix.map(p => stripTagPrefix(col("tag"), p)).getOrElse(col("tag")))
-    val all = cfg.routes :+ cfg.defaultTable
-    val routed = stripped.withColumn("__route",
-      routeColumn(col("tag"), cfg.routes.map(r => (r.compiledPattern, r.table)), cfg.defaultTable.table))
-    all.groupBy(_.table).map { case (tableName, rs) =>
-      val sub = routed.filter(col("__route") === tableName).drop("__route")
-      tableName -> rs.head.mapping(sub)
-    }
-  }
+  def routedTables(df: DataFrame, cfg: OutputConfig): Map[String, DataFrame] =
+    routeEach(df, cfg)((sub, route) => route.mapping(sub.drop("__route")))
 
   /** [[routedTables]] for the `keyset-tail-multi` event shape
     * `(tag, record MAP<STRING,STRING>)`: same strip/route chain, but each
@@ -98,15 +89,22 @@ object EventOps {
     * serialized (strings); destinations wanting native types add a cast
     * projection after the mapping, like the reference relies on the
     * database's implicit cast. */
-  def routedTablesFromMap(df: DataFrame, cfg: OutputConfig): Map[String, DataFrame] = {
+  def routedTablesFromMap(df: DataFrame, cfg: OutputConfig): Map[String, DataFrame] =
+    routeEach(df, cfg)((sub, route) =>
+      sub.select(route.mapping.fromMap(col("record"), col("tag")): _*))
+
+  /** The strip/route step both routed shapes share: strip the configured
+    * tag prefix, tag each row with its first-match `__route` table, and
+    * hand each destination table's rows, with the table's first route
+    * config, to `project`. */
+  private def routeEach(df: DataFrame, cfg: OutputConfig)(
+      project: (DataFrame, SinkTableConfig) => DataFrame): Map[String, DataFrame] = {
     val stripped = df.withColumn("tag",
       cfg.removeTagPrefix.map(p => stripTagPrefix(col("tag"), p)).getOrElse(col("tag")))
-    val all = cfg.routes :+ cfg.defaultTable
     val routed = stripped.withColumn("__route",
       routeColumn(col("tag"), cfg.routes.map(r => (r.compiledPattern, r.table)), cfg.defaultTable.table))
-    all.groupBy(_.table).map { case (tableName, rs) =>
-      val sub = routed.filter(col("__route") === tableName)
-      tableName -> sub.select(rs.head.mapping.fromMap(col("record"), col("tag")): _*)
+    (cfg.routes :+ cfg.defaultTable).groupBy(_.table).map { case (tableName, rs) =>
+      tableName -> project(routed.filter(col("__route") === tableName), rs.head)
     }
   }
 

@@ -336,7 +336,7 @@ object TextOps {
     // gap i+1) — the relational explode-per-gap form shuffles ~2k rows per
     // token with nearly unique (doc, gap, term) keys and measured 1060%
     // at the 10× probe; the kernel makes this stage map-only (spec-proven
-    // equal to the relational referee in Round11OpsSpec)
+    // equal to the test-side Referees.textTilingRelationalDots)
     val dots = docs.select(col(idCol),
         posexplode(graft.functions.TextTilingDots.of(col(textCol), w, k))
           .as(Seq("g0", "dot")))
@@ -363,41 +363,6 @@ object TextOps {
         col("dot"), col("depth"),
         (col("depth") > 0 &&
           col("depth") * 2 * col("n_gaps") >= col("sum_depth") * 3).as("is_boundary"))
-  }
-
-  /** Spec-only RELATIONAL referee for the kernel's cohesion dots: the
-    * definitional explode-per-gap formulation ((doc, gap, term) block sums
-    * → dot). Kept out of the declared path — its shuffle carries ~2k rows
-    * per token with near-unique keys (the 1060% probe) — but it pins the
-    * kernel's tokenization/segmentation/block semantics in
-    * Round11OpsSpec. */
-  private[graft] def textTilingRelationalDots(docs: DataFrame, idCol: String,
-                                              textCol: String, w: Int,
-                                              k: Int): DataFrame = {
-    // segment = token index / w, matching the kernel (and the oracle) on
-    // ARBITRARY text — the earlier w-token regex chunking broke segments
-    // early at any non-space separator and agreed only on [a-z0-9 ] fixtures
-    val segTerms = docs
-      .select(col(idCol), posexplode(tokens(col(textCol))).as(Seq("ti", "term")))
-      .select(col(idCol),
-        call_function("div", col("ti"), lit(w)).cast("int").as("pos"),
-        col("term"))
-    val nSeg = segTerms.groupBy(idCol).agg(max(col("pos")).as("maxPos"))
-    val contrib = segTerms.select(col(idCol), col("term"),
-        explode(array(
-          (1 to k).map(d => struct((col("pos") + d).as("gap"), lit(true).as("isLeft"))) ++
-            (0 until k).map(d => struct((col("pos") - d).as("gap"), lit(false).as("isLeft"))): _*))
-          .as("e"))
-      .select(col(idCol), col("term"),
-        col("e.gap").as("gap"), col("e.isLeft").as("isLeft"))
-      .join(nSeg, Seq(idCol))
-      .filter(col("gap") >= 1 && col("gap") <= col("maxPos"))
-    contrib
-      .groupBy(col(idCol), col("gap"), col("term"))
-      .agg(sum(when(col("isLeft"), 1L).otherwise(0L)).as("lcnt"),
-        sum(when(!col("isLeft"), 1L).otherwise(0L)).as("rcnt"))
-      .groupBy(col(idCol), col("gap"))
-      .agg(sum(col("lcnt") * col("rcnt")).cast("long").as("dot"))
   }
 
   /** DuckDB twin of [[textTiling]] over the `documents` table. Segments by

@@ -5,6 +5,8 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
+import scala.reflect.runtime.universe.TypeTag
+
 /** Event-time streaming operators over the keyset tail (or any streaming
   * DataFrame): the windowing surface the reference never had (its event time
   * is extracted, `in_sql.rb:143-148`, but never windowed — SURVEY §2.2).
@@ -218,42 +220,61 @@ object StreamOps {
     * bit-for-bit (asserted stream==batch in StreamOpsSpec). */
   def minhashNearDupStream(docs: DataFrame, idCol: String, textCol: String,
                            n: Int = 3, numPerm: Int = 32, rowsPerBand: Int = 2,
-                           threshold: Double = 0.5, maxBucket: Int = 64): Dataset[StreamPair] = {
-    require(numPerm % rowsPerBand == 0, "numPerm must be divisible by rowsPerBand")
-    val numBands = numPerm / rowsPerBand
+                           threshold: Double = 0.5, maxBucket: Int = 64): Dataset[StreamPair] =
+    minhashBuckets[StreamPair](docs, idCol, textCol, n, numPerm, rowsPerBand, threshold, maxBucket)(
+      (_, _) => None)((band, a, b, est) => StreamPair(a, b, band, est))
+
+  /** The two MinHash streams' shared pair generation: the portable band
+    * keys of the batch tier ([[graft.ops.Dedup.md5BandKeys]]) through
+    * [[arrivalOrderBuckets]], keeping a pair when its signature-estimated
+    * Jaccard — agreeing permutations in truncating micro-units
+    * (agree·10^6 div numPerm), the 6-dp value [[StreamPair]] carries —
+    * clears `threshold`. */
+  private def minhashBuckets[O <: Product : TypeTag](
+      docs: DataFrame, idCol: String, textCol: String, n: Int, numPerm: Int,
+      rowsPerBand: Int, threshold: Double, maxBucket: Int)(
+      announce: (Int, Long) => Option[O])(edge: (Int, Long, Long, Double) => O): Dataset[O] = {
     val spark = docs.sparkSession
     import spark.implicits._
-    val sigs = docs.select(col(idCol).cast("long").as("id"),
-        graft.ops.TextOps.shingles(col(textCol), n).as("shs"))
-      .filter(size(col("shs")) > 0)
-      .select(col("id"), graft.functions.MinHash.sigsMd5(col("shs"), numPerm).as("sig"))
-    val bandCols = (0 until numBands).map { b =>
-      val slice = (0 until rowsPerBand).map(r => col("sig")(b * rowsPerBand + r).cast("string"))
-      struct(lit(b).as("band"), concat_ws(",", slice: _*).as("bk"))
+    val banded = graft.ops.Dedup.md5BandKeys(
+        docs.select(col(idCol).cast("long").as("id"),
+          graft.ops.TextOps.shingles(col(textCol), n).as("shs")), numPerm, rowsPerBand)
+      .select("band", "bk", "id", "sig").as[(Int, String, Long, List[Long])]
+    arrivalOrderBuckets(banded, maxBucket)(announce) { (band, a, b, sig, msig) =>
+      val agree = sig.iterator.zip(msig).count(p => p._1 == p._2)
+      val est = (agree.toLong * 1000000L / numPerm).toDouble / 1000000d
+      if (est >= threshold) Some(edge(band, a, b, est)) else None
     }
-    val banded = sigs.select(col("id"), col("sig"), explode(array(bandCols: _*)).as("e"))
-      .select(col("e.band").as("band"), col("e.bk").as("bk"), col("id"), col("sig"))
-      .as[(Int, String, Long, List[Long])]
+  }
+
+  /** Bounded arrival-order bucket state, the loop under every near-dup
+    * stream: each `(band, key)` group keeps its first `maxBucket` members
+    * (id + signature) in keyed state. An arrival not yet stored is first
+    * offered to `announce`, then tested by `pair` against every stored
+    * member — called as (band, smaller id, larger id, arrival signature,
+    * member signature) — and stored while the bucket has room; later
+    * arrivals still pair against the stored members but are not stored.
+    * Rows are id-sorted within the batch, so emission and the cap are
+    * deterministic under micro-batch re-partitioning. */
+  private def arrivalOrderBuckets[K: TypeTag, O <: Product : TypeTag](
+      banded: Dataset[(Int, K, Long, List[Long])], maxBucket: Int)(
+      announce: (Int, Long) => Option[O])(
+      pair: (Int, Long, Long, List[Long], List[Long]) => Option[O]): Dataset[O] = {
+    val spark = banded.sparkSession
+    import spark.implicits._
     banded.groupByKey(r => (r._1, r._2))
-      .flatMapGroupsWithState[BucketState, StreamPair](
+      .flatMapGroupsWithState[BucketState, O](
         OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
         case ((band, _), rows, state) =>
           val st = state.getOption.getOrElse(BucketState(Nil, Nil))
           var ids = st.ids
           var sigsStored = st.sigs
-          val out = scala.collection.mutable.ListBuffer.empty[StreamPair]
-          // id-sorted within the batch: emission and the arrival-order cap
-          // are deterministic under micro-batch re-partitioning
+          val out = scala.collection.mutable.ListBuffer.empty[O]
           rows.toSeq.sortBy(_._3).foreach { case (_, _, id, sig) =>
             if (!ids.contains(id)) {
+              out ++= announce(band, id)
               ids.iterator.zip(sigsStored.iterator).foreach { case (mid, msig) =>
-                var agree = 0
-                var i = 0
-                while (i < numPerm) { if (sig(i) == msig(i)) agree += 1; i += 1 }
-                val estMicro = agree.toLong * 1000000L / numPerm
-                if (estMicro.toDouble / 1000000d >= threshold)
-                  out += StreamPair(math.min(id, mid), math.max(id, mid), band,
-                    estMicro.toDouble / 1000000d)
+                out ++= pair(band, math.min(id, mid), math.max(id, mid), sig, msig)
               }
               if (ids.size < maxBucket) { ids = ids :+ id; sigsStored = sigsStored :+ sig }
             }
@@ -287,47 +308,10 @@ object StreamOps {
     * upsert-table shape), while pair generation keeps its keyed state. */
   def clusterDeltaStream(docs: DataFrame, idCol: String, textCol: String,
                          n: Int = 3, numPerm: Int = 32, rowsPerBand: Int = 2,
-                         threshold: Double = 0.5, maxBucket: Int = 64): Dataset[ClusterDelta] = {
-    require(numPerm % rowsPerBand == 0, "numPerm must be divisible by rowsPerBand")
-    val numBands = numPerm / rowsPerBand
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val sigs = docs.select(col(idCol).cast("long").as("id"),
-        graft.ops.TextOps.shingles(col(textCol), n).as("shs"))
-      .filter(size(col("shs")) > 0)
-      .select(col("id"), graft.functions.MinHash.sigsMd5(col("shs"), numPerm).as("sig"))
-    val bandCols = (0 until numBands).map { b =>
-      val slice = (0 until rowsPerBand).map(r => col("sig")(b * rowsPerBand + r).cast("string"))
-      struct(lit(b).as("band"), concat_ws(",", slice: _*).as("bk"))
-    }
-    val banded = sigs.select(col("id"), col("sig"), explode(array(bandCols: _*)).as("e"))
-      .select(col("e.band").as("band"), col("e.bk").as("bk"), col("id"), col("sig"))
-      .as[(Int, String, Long, List[Long])]
-    banded.groupByKey(r => (r._1, r._2))
-      .flatMapGroupsWithState[BucketState, ClusterDelta](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        case ((band, _), rows, state) =>
-          val st = state.getOption.getOrElse(BucketState(Nil, Nil))
-          var ids = st.ids
-          var sigsStored = st.sigs
-          val out = scala.collection.mutable.ListBuffer.empty[ClusterDelta]
-          rows.toSeq.sortBy(_._3).foreach { case (_, _, id, sig) =>
-            if (!ids.contains(id)) {
-              if (band == 0) out += ClusterDelta(id, id, "node")
-              ids.iterator.zip(sigsStored.iterator).foreach { case (mid, msig) =>
-                var agree = 0
-                var i = 0
-                while (i < numPerm) { if (sig(i) == msig(i)) agree += 1; i += 1 }
-                if (agree.toLong * 1000000L / numPerm >= (threshold * 1000000L).toLong)
-                  out += ClusterDelta(math.min(id, mid), math.max(id, mid), "edge")
-              }
-              if (ids.size < maxBucket) { ids = ids :+ id; sigsStored = sigsStored :+ sig }
-            }
-          }
-          state.update(BucketState(ids, sigsStored))
-          out.iterator
-      }
-  }
+                         threshold: Double = 0.5, maxBucket: Int = 64): Dataset[ClusterDelta] =
+    minhashBuckets[ClusterDelta](docs, idCol, textCol, n, numPerm, rowsPerBand, threshold, maxBucket)(
+      (band, id) => if (band == 0) Some(ClusterDelta(id, id, "node")) else None)(
+      (_, a, b, _) => ClusterDelta(a, b, "edge"))
 
   /** Stage 2 of streaming cluster maintenance (see [[clusterDeltaStream]]):
     * absorbs each micro-batch of deltas into a maintained (id, label)
@@ -371,37 +355,15 @@ object StreamOps {
                          maxBucket: Int = 64): Dataset[ImagePair] = {
     val spark = assets.sparkSession
     import spark.implicits._
-    val sig = graft.ops.Multimodal.ahashBmpAssets(assets)
-    val chunkCols = (0 until 4).map(c =>
-      struct(lit(c).as("chunk"), col(s"c$c").as("v")))
-    val banded = sig.select(col("asset_id").as("id"),
-        array(col("c0"), col("c1"), col("c2"), col("c3")).as("sig"),
-        explode(array(chunkCols: _*)).as("e"))
-      .select(col("e.chunk").as("chunk"), col("e.v").as("v"), col("id"), col("sig"))
+    val banded = graft.ops.Dedup.chunkBands(
+        graft.ops.Multimodal.ahashBmpAssets(assets).withColumnRenamed("asset_id", "id"))
+      .select(col("chunk"), col("v"), col("id"),
+        array(col("c0"), col("c1"), col("c2"), col("c3")).as("sig"))
       .as[(Int, Long, Long, List[Long])]
-    banded.groupByKey(r => (r._1, r._2))
-      .flatMapGroupsWithState[BucketState, ImagePair](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        case ((chunk, _), rows, state) =>
-          val st = state.getOption.getOrElse(BucketState(Nil, Nil))
-          var ids = st.ids
-          var sigsStored = st.sigs
-          val out = scala.collection.mutable.ListBuffer.empty[ImagePair]
-          rows.toSeq.sortBy(_._3).foreach { case (_, _, id, sig) =>
-            if (!ids.contains(id)) {
-              ids.iterator.zip(sigsStored.iterator).foreach { case (mid, msig) =>
-                var ham = 0L
-                var i = 0
-                while (i < 4) { ham += java.lang.Long.bitCount(sig(i) ^ msig(i)); i += 1 }
-                if (ham <= maxHamming)
-                  out += ImagePair(math.min(id, mid), math.max(id, mid), chunk, ham)
-              }
-              if (ids.size < maxBucket) { ids = ids :+ id; sigsStored = sigsStored :+ sig }
-            }
-          }
-          state.update(BucketState(ids, sigsStored))
-          out.iterator
-      }
+    arrivalOrderBuckets[Long, ImagePair](banded, maxBucket)((_, _) => None) { (chunk, a, b, sig, msig) =>
+      val ham = sig.iterator.zip(msig).map(p => java.lang.Long.bitCount(p._1 ^ p._2).toLong).sum
+      if (ham <= maxHamming) Some(ImagePair(a, b, chunk, ham)) else None
+    }
   }
 
   /** Per-asset cursor for [[keyframeStream]]: the previous frame's index

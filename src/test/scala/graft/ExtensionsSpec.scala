@@ -111,7 +111,7 @@ class DedupSpec extends SparkSpecBase {
       .filter(size(col("shs")) > 0)
       .select(col("id"), graft.functions.MinHash.sigsMd5(col("shs"), numPerm).as("sig"))
       .collect().map(r => r.getLong(0) -> r.getSeq[Long](1).toVector).toMap
-    val relational = Dedup.minhashSigsPortableRelational(docs, "doc_id", "text", 3, numPerm)
+    val relational = Referees.minhashSigsPortableRelational(docs, "doc_id", "text", 3, numPerm)
       .collect().map(r => r.getLong(0) -> (1 to numPerm).map(r.getLong).toVector).toMap
     assert(native.nonEmpty && native === relational)
   }
@@ -120,7 +120,7 @@ class DedupSpec extends SparkSpecBase {
     val native = Dedup.simhash4x16Portable(docs, "doc_id", "text", 3)
       .collect().map(r => r.getLong(0) ->
         (r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4))).toMap
-    val relational = Dedup.simhash4x16PortableRelational(docs, "doc_id", "text", 3)
+    val relational = Referees.simhash4x16PortableRelational(docs, "doc_id", "text", 3)
       .collect().map(r => r.getLong(0) ->
         (r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4))).toMap
     assert(native.nonEmpty && native === relational)

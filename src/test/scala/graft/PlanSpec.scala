@@ -288,7 +288,7 @@ class PlanSpec extends SparkSpecBase {
     val prev = spark.conf.get(aqeKey)
     val plan = try {
       spark.conf.set(aqeKey, "false")
-      ops.Dedup.winnowFingerprintsPortableRelational(
+      Referees.winnowFingerprintsPortableRelational(
         sources.Tables.documents(spark, sf0001), "doc_id", "text")
         .queryExecution.executedPlan
     } finally spark.conf.set(aqeKey, prev)

@@ -81,7 +81,7 @@ class Round12OpsSpec extends SparkSpecBase {
           .as(Seq("g0", "dot")))
       .select(col("doc_id"), (col("g0") + 1).as("gap"), col("dot"))
       .orderBy("doc_id", "gap").collect().toSeq
-    val relational = graft.ops.TextOps
+    val relational = Referees
       .textTilingRelationalDots(docs, "doc_id", "text", w = 10, k = 2)
       .orderBy("doc_id", "gap").collect().toSeq
     assert(kernel.nonEmpty && kernel === relational)

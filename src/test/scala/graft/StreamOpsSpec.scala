@@ -400,6 +400,59 @@ class StreamOpsSpec extends SparkSpecBase {
     assert(pairs === Set((1L, 2L), (1L, 3L)))
   }
 
+  test("cluster-delta edges are the minhash stream's pairs, threshold just above an agree count") {
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    import spark.implicits._
+    val numPerm = 32
+    val docs = Tables.documents(spark, sf0001)
+      .select(col("doc_id").cast("long"), col("text")).as[(Long, String)].collect()
+    // agree counts of the pairs that share a band bucket (the reference
+    // banding of the stream==batch case above); t sits 1e-7 above one of
+    // them, so pairs agreeing on exactly k permutations must be dropped by
+    // both streams
+    val sigs = Tables.documents(spark, sf0001)
+      .select(col("doc_id").cast("long").as("id"),
+        graft.ops.TextOps.shingles(col("text"), 3).as("shs"))
+      .filter(size(col("shs")) > 0)
+      .select(col("id"), graft.functions.MinHash.sigsMd5(col("shs"), numPerm).as("sig"))
+    val bandCols = (0 until numPerm / 2).map { b =>
+      struct(lit(b).as("band"),
+        concat_ws(",", col("sig")(2 * b).cast("string"), col("sig")(2 * b + 1).cast("string"))
+          .as("bk"))
+    }
+    val banded = sigs.select(col("id"), col("sig"), explode(array(bandCols: _*)).as("e"))
+      .select(col("e.band").as("band"), col("e.bk").as("bk"), col("id"), col("sig"))
+    val agrees = banded.select(col("band"), col("bk"), col("id").as("id_a"), col("sig").as("siga"))
+      .join(banded.select(col("band"), col("bk"), col("id").as("id_b"), col("sig").as("sigb")),
+        Seq("band", "bk"))
+      .filter(col("id_a") < col("id_b"))
+      .select(expr("size(filter(zip_with(siga, sigb, (x, y) -> x = y), z -> z))"))
+      .as[Int].collect().toSet
+    val k = agrees.filter(_ >= numPerm / 2).min
+    val t = k / 32.0 + 1e-7
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val (late, early) = docs.partition(_._1 % 5 == 0)
+    def run(name: String, op: DataFrame => org.apache.spark.sql.Dataset[_]): DataFrame = {
+      val ms = MemoryStream[(Long, String)]
+      val q = op(ms.toDF().toDF("doc_id", "text")).writeStream.format("memory")
+        .queryName(name).outputMode("append").start()
+      try {
+        ms.addData(early.toSeq); q.processAllAvailable()
+        ms.addData(late.toSeq); q.processAllAvailable()
+      } finally q.stop()
+      spark.table(name)
+    }
+    val pairs = run("s_mh_t", StreamOps.minhashNearDupStream(_, "doc_id", "text",
+        threshold = t, maxBucket = 1 << 20))
+      .select("id_a", "id_b").distinct().as[(Long, Long)].collect().toSet
+    val edges = run("s_cd_t", StreamOps.clusterDeltaStream(_, "doc_id", "text",
+        threshold = t, maxBucket = 1 << 20))
+      .filter(col("kind") === "edge").select("id_a", "id_b").distinct()
+      .as[(Long, Long)].collect().toSet
+    assert(pairs.nonEmpty, s"fixture must produce pairs above k = $k")
+    assert(edges === pairs, s"k = $k")
+  }
+
   test("streaming image aHash near-dup equals the batch chunk4x16Pairs tier") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import spark.implicits._

@@ -77,7 +77,7 @@ class WinnowSpec extends SparkSpecBase {
     val docs = Tables.documents(spark, sf0001)
     val native = Dedup.winnowFingerprintsPortable(docs, "doc_id", "text", k = 16, w = 4)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val relational = Dedup.winnowFingerprintsPortableRelational(docs, "doc_id", "text", k = 16, w = 4)
+    val relational = Referees.winnowFingerprintsPortableRelational(docs, "doc_id", "text", k = 16, w = 4)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(native === relational && native.nonEmpty)
   }
