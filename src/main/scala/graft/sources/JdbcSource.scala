@@ -7,6 +7,7 @@ import scala.collection.mutable
 import scala.util.Using
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.{DataType, NumericType}
 
 import graft.core.SystemTables
 
@@ -19,30 +20,39 @@ import graft.core.SystemTables
   */
 object JdbcSource {
 
-  /** A serialized keyset resume value as a SQL literal. Numeric values go
-    * unquoted (strict engines like Derby refuse BIGINT > CHAR); everything
-    * else stays a quoted string and round-trips through the DB's cast,
-    * exactly like the reference's serialized resume (`in_sql.rb:131, 141`).
-    * The ONE literal form used by the page query and the streaming
-    * sub-range readers, so boundary semantics can never diverge. */
-  def sqlLiteral(v: String): String =
-    if (v.matches("-?\\d+(\\.\\d+)?")) v else "'" + v.replace("'", "''") + "'"
+  /** A serialized keyset resume value as a SQL literal of the update
+    * column's Catalyst type `dt`. Numeric columns go unquoted (strict
+    * engines like Derby refuse BIGINT > CHAR, and DOUBLE serializes in
+    * E-notation from 1e7 up); every other column is a quoted string that
+    * round-trips through the DB's cast, exactly like the reference's
+    * serialized resume (`in_sql.rb:131, 141`) — a VARCHAR `010` stays a
+    * string. The ONE literal form of the page and range queries, so
+    * boundary semantics can never diverge. */
+  def sqlLiteral(v: String, dt: DataType): String = dt match {
+    case _: NumericType => v
+    case _              => "'" + v.replace("'", "''") + "'"
+  }
 
   /** Whether the URL's dialect lacks LIMIT and pages with
     * `FETCH FIRST n ROWS ONLY` instead (Derby/Oracle/DB2). */
   def fetchFirstDialect(url: String): Boolean =
     Seq("jdbc:derby", "jdbc:oracle", "jdbc:db2").exists(url.startsWith)
 
+  /** The `(lo, hi]` predicate of the update column (`lo = None`: open
+    * below), literals typed by [[sqlLiteral]]. */
+  private def rangeBounds(updateColumn: String, updType: DataType,
+                          lo: Option[String], hi: String): String =
+    lo.map(v => s"${sqlLiteral(v, updType)} < $updateColumn AND ").getOrElse("") +
+      s"$updateColumn <= ${sqlLiteral(hi, updType)}"
+
   /** The executor-side query for one keyset sub-range `(lo, hi]` of the
     * update column (`lo = None`: open below). No ORDER/LIMIT: sub-ranges
     * tile a batch exactly, and batch assembly has no order contract.
     * Identifiers arrive already quoted as the caller needs them. */
   def rangeQuery(columns: Seq[String], table: String, updateColumn: String,
-                 lo: Option[String], hi: String): String = {
-    val bounds = lo.map(v => s"${sqlLiteral(v)} < $updateColumn AND ").getOrElse("") +
-      s"$updateColumn <= ${sqlLiteral(hi)}"
-    s"SELECT ${columns.mkString(", ")} FROM $table WHERE $bounds"
-  }
+                 updType: DataType, lo: Option[String], hi: String): String =
+    s"SELECT ${columns.mkString(", ")} FROM $table WHERE " +
+      rangeBounds(updateColumn, updType, lo, hi)
 
   /** The page-limit clause: `FETCH FIRST n ROWS ONLY` for LIMIT-less
     * dialects ([[fetchFirstDialect]]), `LIMIT n` otherwise. */
@@ -55,10 +65,17 @@ object JdbcSource {
     * it: an unbounded page is the whole remaining range, and its
     * aggregation/sub-range consumers don't need order — leaving the ORDER BY
     * in would make unindexed databases sort the full remainder per poll for
-    * nothing (planners are NOT guaranteed to elide a subquery ORDER BY). */
-  def pageQuery(select: String, table: String, updateColumn: String,
-                last: Option[String], limit: Int, fetchFirst: Boolean): String = {
-    val where = last.map(v => s"WHERE $updateColumn > ${sqlLiteral(v)}").getOrElse("")
+    * nothing (planners are NOT guaranteed to elide a subquery ORDER BY).
+    * `hi` caps the page from above with [[rangeQuery]]'s `(last, hi]`
+    * predicate (a `Trigger.AvailableNow` run's target). */
+  def pageQuery(select: String, table: String, updateColumn: String, updType: DataType,
+                last: Option[String], limit: Int, fetchFirst: Boolean,
+                hi: Option[String] = None): String = {
+    val where = hi match {
+      case Some(h) => "WHERE " + rangeBounds(updateColumn, updType, last, h)
+      case None =>
+        last.map(v => s"WHERE $updateColumn > ${sqlLiteral(v, updType)}").getOrElse("")
+    }
     if (limit <= 0) s"SELECT $select FROM $table $where"
     else s"SELECT $select FROM $table $where ORDER BY $updateColumn ASC " +
       pageLimit(limit, fetchFirst)
@@ -68,10 +85,11 @@ object JdbcSource {
     * subquery, so the database's index answers it. `fetchFirstSyntax`
     * covers LIMIT-less dialects ([[fetchFirstDialect]]). */
   def keysetPage(spark: SparkSession, url: String, table: String, updateColumn: String,
-                 last: Option[String], limit: Int, props: Properties = new Properties(),
+                 updType: DataType, last: Option[String], limit: Int,
+                 props: Properties = new Properties(),
                  fetchFirstSyntax: Boolean = false): DataFrame =
-    spark.read.jdbc(url,
-      s"(${pageQuery("*", table, updateColumn, last, limit, fetchFirstSyntax)}) page", props)
+    spark.read.jdbc(url, s"(${pageQuery("*", table, updateColumn, updType, last, limit,
+      fetchFirstSyntax)}) page", props)
 
   /** `all_tables` discovery via JDBC catalog metadata, skipping system
     * tables (`in_sql.rb:214-230`, skip `in_sql.rb:183`). Catalog listing is

@@ -1,13 +1,13 @@
 package graft.sources
 
-import org.apache.spark.sql.Row
 import org.apache.spark.sql.types._
 
 import graft.core.RubyStrftime
 
-/** Row → serialized-string map, the reference's `serializable_hash` shape
-  * (`in_sql.rb:87-96, 141`): the keyset resume value is taken from THIS
-  * serialized form, so timestamps resume from their formatted string. */
+/** Value → serialized string, one field of the reference's
+  * `serializable_hash` shape (`in_sql.rb:87-96, 141`): the keyset resume
+  * value is taken from THIS serialized form, so timestamps resume from
+  * their formatted string. */
 object Serialize {
 
   /** Zone used for driver-side timestamp rendering — must agree with the
@@ -20,9 +20,10 @@ object Serialize {
       .getOrElse(java.time.ZoneOffset.UTC)
 
   /** Serialize ONE external value (a collected scalar — an offset boundary,
-    * a sub-range cut) to its resume-string form: the same rendering
-    * [[rowToStringMap]] applies per field, so a boundary serialized from an
-    * aggregate is byte-identical to one serialized from a collected row. */
+    * a sub-range cut) to its resume-string form: the same rendering the
+    * event shape applies per record field (`KeysetRangeReader`), so a
+    * boundary serialized from an aggregate is byte-identical to the
+    * record's own field. */
   def valueToString(dt: DataType, v: Any,
                     rubyTimeFormat: String = RubyStrftime.DefaultRubyFormat): String =
     dt match {
@@ -39,14 +40,4 @@ object Serialize {
         }
       case _ => v.toString
     }
-
-  /** Serialize every column of a local Row (already collected; bounded by
-    * select_limit) to the string map persisted in the state store. */
-  def rowToStringMap(schema: StructType, row: Row,
-                     rubyTimeFormat: String = RubyStrftime.DefaultRubyFormat): Map[String, String] = {
-    schema.fields.zipWithIndex.flatMap { case (f, i) =>
-      if (row.isNullAt(i)) None
-      else Some(f.name -> valueToString(f.dataType, row.get(i), rubyTimeFormat))
-    }.toMap
-  }
 }

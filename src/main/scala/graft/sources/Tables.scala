@@ -4,11 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, LongType, TimestampNTZType, TimestampType}
 
-import graft.core.SystemTables
-
-/** Parquet-backed table loading for the driver testdata, plus the catalog
-  * discovery semantics the reference applies to a live database
-  * (`all_tables`, `in_sql.rb:178-180, 214-230`).
+/** Parquet-backed table loading for the driver testdata.
   *
   * Scale notes: everything returns a lazy DataFrame straight off the parquet
   * scan — filters/projections composed on top reach the scan via Catalyst
@@ -180,17 +176,4 @@ object Tables {
     widen(documents(spark, sfDir), "doc_id")
   def embeddingsWide(spark: SparkSession, sfDir: String): DataFrame =
     widen(embeddings(spark, sfDir), "vec_id")
-
-  /** `all_tables` discovery over a directory of parquet tables, skipping
-    * system tables (`in_sql.rb:214-230`). For a JDBC catalog the same
-    * filter applies over `information_schema.tables`. */
-  def discover(dir: String): Seq[String] = {
-    val d = new java.io.File(dir)
-    Option(d.listFiles()).getOrElse(Array.empty)
-      .filter(f => f.getName.endsWith(".parquet"))
-      .map(_.getName.stripSuffix(".parquet"))
-      .filterNot(SystemTables.isSystemTable)
-      .sorted
-      .toSeq
-  }
 }

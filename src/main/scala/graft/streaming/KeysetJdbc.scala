@@ -23,7 +23,8 @@ import graft.sources.{JdbcSource, Serialize}
   * and the `(lo, hi]` range partition ([[KeysetRange]]) with its
   * executor-side reader ([[KeysetRangeReader]]). The SQL strings themselves
   * (literal, page, range, page-limit clause) are [[JdbcSource]]'s, shared
-  * with the batch runner. Poll and planning policies stay with each stream.
+  * with the Spark JDBC page scan (`JdbcSource.keysetPage`). Poll and
+  * planning policies stay with each stream.
   */
 object KeysetJdbc {
   private val ConnKeys = Seq("user", "password", "driver", "sessionInitStatement")
@@ -109,7 +110,8 @@ object KeysetJdbc {
             schema: StructType, updCol: String, lo: Option[String], hi: String,
             event: Option[KeysetRange.Event] = None): KeysetRange =
     KeysetRange(url, dbtable, props, schema,
-      schema.fieldNames.toSeq.map(quote(url, _)), quote(url, updCol), lo, hi, event)
+      schema.fieldNames.toSeq.map(quote(url, _)), quote(url, updCol),
+      schema(updCol).dataType, lo, hi, event)
 }
 
 /** One `(lo, hi]` value range of one table's micro-batch: SERIALIZED bounds
@@ -123,10 +125,10 @@ object KeysetJdbc {
   * [[KeysetTailMulti.EventSchema]]). */
 final case class KeysetRange(
     url: String, dbtable: String, props: Map[String, String],
-    schema: StructType, columns: Seq[String], updCol: String,
+    schema: StructType, columns: Seq[String], updCol: String, updType: DataType,
     lo: Option[String], hi: String,
     event: Option[KeysetRange.Event]) extends InputPartition {
-  def query: String = JdbcSource.rangeQuery(columns, dbtable, updCol, lo, hi)
+  def query: String = JdbcSource.rangeQuery(columns, dbtable, updCol, updType, lo, hi)
   /** The event tag; the table for typed ranges. */
   def tag: String = event.fold(dbtable)(_.tag)
 }
@@ -146,7 +148,7 @@ final class KeysetRangeReaderFactory extends PartitionReaderFactory {
   * getter per field ([[KeysetJdbc.get]]). Typed shape: the values convert
   * to an InternalRow of the range's schema. Event shape: each non-NULL
   * value serializes per §1.2 (`Serialize.valueToString`; NULL fields
-  * absent — `Serialize.rowToStringMap` semantics) into `(tag, record)`.
+  * absent from the map) into `(tag, record)`.
   * No residual filter: the database's comparison is the source of truth.
   * Rows follow the DSv2 contract (valid until the next `next()`). */
 final class KeysetRangeReader(p: KeysetRange) extends PartitionReader[InternalRow] {

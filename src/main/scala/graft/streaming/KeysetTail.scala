@@ -42,22 +42,15 @@ object KeysetTail {
     r
   }
 
-  /** One reader per configured (or discovered-upstream) table — N
-    * independent queries. Prefer [[multiReader]] for the reference's
-    * actual shape (ONE poll loop over all tables, one checkpoint,
-    * per-table fault isolation); per-table readers remain the right tool
-    * when one table needs its own trigger cadence or the single-table
-    * source's sub-range partition planner. */
-  def readers(spark: SparkSession, cc: ConnectionConfig,
-              cfg: InputConfig): Map[String, DataStreamReader] =
-    cfg.tables.map(t => t.resolvedTag(cfg.tagPrefix) ->
-      reader(spark, cc, t, cfg.selectLimit)).toMap
-
   /** ALL configured tables as ONE coordinated stream
     * (`format("keyset-tail-multi")`): one checkpoint, one trigger, tagged
     * `(tag, record MAP<STRING,STRING>)` events, per-table fault isolation
     * (`in_sql.rb:233-243, 272-275`) — the reference's single input plugin,
-    * whole. */
+    * whole. Start it with [[trigger]] for the poll loop, or with
+    * `Trigger.AvailableNow` for a batch/cron run that drains each table to
+    * its `MAX(upd)` at start and stops; the checkpoint's offset log is the
+    * `state_file` either way. [[reader]] remains for one table that needs
+    * its own cadence or the typed sub-range planner. */
   def multiReader(spark: SparkSession, cc: ConnectionConfig,
                   cfg: InputConfig): DataStreamReader = {
     var r = spark.readStream.format("keyset-tail-multi")

@@ -8,7 +8,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReaderFactory, Scan, ScanBuilder}
-import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, SupportsAdmissionControl}
+import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, SupportsTriggerAvailableNow}
 import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -52,8 +52,7 @@ import graft.sources.{JdbcSource, Serialize}
   * reference's own event shape (`in_sql.rb:139-158`): `tag STRING` +
   * `record MAP<STRING,STRING>` with the §1.2 serialization applied per
   * field (timestamps through the table's `time_format`, everything else
-  * stringified; NULL fields absent from the map — `Serialize
-  * .rowToStringMap` semantics). Event-time extraction / typed projection
+  * stringified; NULL fields absent from the map). Event-time extraction / typed projection
   * are downstream concerns, exactly as in the reference where the router
   * consumes serialized records.
   *
@@ -70,6 +69,13 @@ import graft.sources.{JdbcSource, Serialize}
   * page is `select_limit`-bounded); a single huge table wanting sub-range
   * parallel reads is the single-table `keyset-tail` source's job
   * (percentile-cut partition planner).
+  *
+  * Schedules: any processing-time trigger is the reference's poll loop
+  * (`select_interval`, [[KeysetTail.trigger]]); `Trigger.AvailableNow` is
+  * its batch/cron run — each live table drains up to its `MAX(upd)` at run
+  * start, page by page, and the query stops by itself. Either way the
+  * checkpoint's offset log is the reference's `state_file`
+  * (`in_sql.rb:280-307`): the next run resumes every table from it.
   *
   * Options: `url` (+ `user`/`password`/`driver`/`sessionInitStatement`),
   * `maxRowsPerBatch` (per table per poll; `<= 0` reads all
@@ -177,7 +183,7 @@ object KeysetMultiMicroBatchStream {
 final class KeysetMultiMicroBatchStream(url: String, connProps: Map[String, String],
     specs: Seq[KeysetTailMulti.TableSpec], maxRowsPerBatch: Int, fetchFirst: Boolean,
     demoteAfter: Int = 3, reprobeBackoffStart: Int = 2)
-    extends MicroBatchStream with SupportsAdmissionControl {
+    extends MicroBatchStream with SupportsTriggerAvailableNow {
   import KeysetTailMulti._
 
   private def spark = SparkSession.active
@@ -352,20 +358,21 @@ final class KeysetMultiMicroBatchStream(url: String, connProps: Map[String, Stri
 
   /** The page's max update value via ONE driver-side JDBC scalar per table
     * (the reference's poll-thread shape — no Spark job per poll): bounded
-    * by the page subquery when `maxRowsPerBatch > 0`, the whole remainder
-    * otherwise. Runs on the stream's ONE cached connection.
+    * by the page subquery when `limit > 0`, the whole remainder otherwise,
+    * and capped at `hi` when set (an AvailableNow run's target). Runs on
+    * the stream's ONE cached connection.
     *
     * The bound is VALUE-based (MAX over the LIMIT-ed page) while the range
     * partition has no LIMIT, so `updateColumn` should be (near-)unique per
     * value for the page bound to hold: a coarse column (second-granularity
     * timestamps under heavy write rates) makes every tie group travel
-    * whole, inflating one single-reader partition past `maxRowsPerBatch` —
-    * the same strict-`>` tie-group contract as the batch runner. */
+    * whole, inflating one single-reader partition past `maxRowsPerBatch`. */
   private def pollBoundary(conn: java.sql.Connection, t: ResolvedTable,
-                           last: Option[String]): Option[String] = {
+                           last: Option[String], limit: Int,
+                           hi: Option[String]): Option[String] = {
     val u = KeysetJdbc.quote(url, t.updCol)
-    val page = JdbcSource.pageQuery(s"$u AS page_u", t.spec.dbtable, u, last,
-      maxRowsPerBatch, fetchFirst)
+    val page = JdbcSource.pageQuery(s"$u AS page_u", t.spec.dbtable, u, t.updType,
+      last, limit, fetchFirst, hi)
     val sql = s"SELECT MAX(page_u) FROM ($page) page"
     val st = conn.createStatement()
     try {
@@ -403,6 +410,27 @@ final class KeysetMultiMicroBatchStream(url: String, connProps: Map[String, Stri
     * skip it. */
   private val rolledBackTo = scala.collection.mutable.Map.empty[String, Option[String]]
 
+  /** A `Trigger.AvailableNow` run's per-tag targets: each live table's
+    * `MAX(upd)` when the run started ([[prepareForTriggerAvailableNow]]).
+    * While set, every poll reads `(last, target]` only, so the run ends once
+    * each table has reached its target or is held, however fast writers
+    * append. A tag without a target (empty table, failed target query) is
+    * held for the run. None under every other trigger. */
+  @volatile private var targets: Option[Map[String, String]] = None
+
+  override def prepareForTriggerAvailableNow(): Unit = {
+    val conn = cycleConnection() // None: warned, every table held this run
+    targets = Some(live.flatMap { t =>
+      try conn.flatMap(pollBoundary(_, t, None, 0, None)).map(t.spec.tag -> _)
+      catch {
+        case scala.util.control.NonFatal(e) =>
+          warn(s"table '${t.spec.tag}' target query failed (held for this " +
+            s"AvailableNow run, offset kept): ${e.getMessage}")
+          None
+      }
+    }.toMap)
+  }
+
   override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
     val s0 = start.asInstanceOf[KeysetMultiOffset].last
     val rolled = synchronized { pendingRollback.toMap }
@@ -413,10 +441,14 @@ final class KeysetMultiMicroBatchStream(url: String, connProps: Map[String, Stri
     }
     cycleN += 1
     var advanced = false
-    val polled = live.iterator.filter(t => pollableThisCycle(t.spec.tag)).map { t =>
+    val caps = targets
+    val polled = live.iterator.filter { t =>
+      pollableThisCycle(t.spec.tag) && caps.forall(_.contains(t.spec.tag))
+    }.map { t =>
       val prev = s.getOrElse(t.spec.tag, None)
       val nxt =
-        try pollBoundary(conn, t, prev) match {
+        try pollBoundary(conn, t, prev, maxRowsPerBatch,
+            caps.flatMap(_.get(t.spec.tag))) match {
           case Some(b) if !prev.contains(b) =>
             // commit the advance only when a full-row read can succeed —
             // a failed probe holds the boundary (nothing skipped) and

@@ -239,8 +239,8 @@ final class KeysetMicroBatchStream(schema: StructType, mode: KeysetReadMode,
       KeysetScan.scan(spark.read.schema(schema).parquet(path), updCol, last,
         limit, rubyTimeFormat = rubyTimeFormat)
     case JdbcMode(url, dbtable, props, ff) =>
-      JdbcSource.keysetPage(spark, url, dbtable, KeysetJdbc.quote(url, updCol), last,
-        limit, KeysetJdbc.properties(props), ff)
+      JdbcSource.keysetPage(spark, url, dbtable, KeysetJdbc.quote(url, updCol), updType,
+        last, limit, KeysetJdbc.properties(props), ff)
   }
 
   override def initialOffset(): Offset = KeysetOffset(None)

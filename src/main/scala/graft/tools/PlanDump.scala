@@ -7,10 +7,28 @@ import graft.SparkEntry
   * (initial formatted plan + the executed plan after one run of the same
   * QueryExecution, so AQE's final shape is visible too; a noop-sink write
   * would plan and run a separate one and leave this plan unfinalised).
+  * Run-dependent tokens are normalised ([[normalise]]), so two runs of one
+  * commit write identical files and `diff -r` of two output dirs is the
+  * plan-identity receipt.
   *
   * `runMain graft.tools.PlanDump <sfDir> <outDir> <suffix> <query>...`
   */
 object PlanDump {
+  /** Tokens that name a run, not a plan: expression ids, Dataset plan ids,
+    * RDD ids (localCheckpoint scans), lambda class names and identity
+    * hashes, AQE query-stage ids and whole-stage-codegen ids. */
+  private val RunTokens: Seq[(scala.util.matching.Regex, String)] = Seq(
+    "#\\d+".r -> "#n",
+    "plan_id=\\d+".r -> "plan_id=n",
+    "(\\w*RDD)\\[\\d+\\]".r -> "$1[n]",
+    "\\$\\$Lambda[\\w$/.]*(@[0-9a-f]+)?".r -> "\\$\\$Lambda",
+    "(QueryStage) \\d+".r -> "$1 n",
+    "\\*\\(\\d+\\)".r -> "*(n)",
+    "(codegen id : |WholeStageCodegen \\()\\d+".r -> "$1n")
+
+  def normalise(plan: String): String =
+    RunTokens.foldLeft(plan) { case (s, (re, to)) => re.replaceAllIn(s, to) }
+
   def main(args: Array[String]): Unit = {
     require(args.length >= 4, "usage: PlanDump <sfDir> <outDir> <suffix> <query>...")
     val sfDir = args(0)
@@ -27,7 +45,8 @@ object PlanDump {
       val executed = df.queryExecution.executedPlan.toString
       java.nio.file.Files.writeString(
         java.nio.file.Paths.get(s"$outDir/${n}_$suffix.txt"),
-        s"== explain(formatted) ==\n$formatted\n\n== executed plan (post-AQE) ==\n${executed.take(40000)}\n")
+        normalise(s"== explain(formatted) ==\n$formatted\n\n== executed plan " +
+          s"(post-AQE) ==\n${executed.take(40000)}\n"))
       System.err.println(s"[plandump] wrote $outDir/${n}_$suffix.txt")
     }
     spark.stop()

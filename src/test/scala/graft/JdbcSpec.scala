@@ -3,6 +3,7 @@ package graft
 import java.sql.DriverManager
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.LongType
 
 import graft.sinks.JdbcSink
 import graft.sources.{JdbcSource, Tables}
@@ -102,11 +103,12 @@ class JdbcSpec extends SparkSpecBase {
     assert(all.count() === 50)
 
     // keyset resume: page 1 → boundary → page 2, strict >
-    val p1 = JdbcSource.keysetPage(spark, url, "logs", "id", None, 20, fetchFirstSyntax = true)
+    val p1 = JdbcSource.keysetPage(spark, url, "logs", "id", LongType, None, 20,
+      fetchFirstSyntax = true)
       .collect()
     assert(p1.length === 20)
     val boundary = p1.last.getLong(0) // Derby uppercases identifiers (ID)
-    val p2 = JdbcSource.keysetPage(spark, url, "logs", "id", Some(boundary.toString), 20,
+    val p2 = JdbcSource.keysetPage(spark, url, "logs", "id", LongType, Some(boundary.toString), 20,
       fetchFirstSyntax = true).collect()
     assert(p2.head.getLong(0) === boundary + 1)
   }
@@ -156,11 +158,18 @@ class JdbcSpec extends SparkSpecBase {
 
   test("config-text to pipeline e2e: parse, tail, route, land") {
     import graft.core.ConfigText
-    import graft.sources.{KeysetTailRunner, MemoryStateStore}
+    exec("CREATE TABLE events (event_id BIGINT NOT NULL PRIMARY KEY, event_type VARCHAR(20))")
+    exec("CREATE TABLE orders (o_orderkey BIGINT NOT NULL PRIMARY KEY, o_custkey BIGINT)")
+    JdbcSink.bulkAppend(Tables.events(spark, sf0001).select("event_id", "event_type"),
+      url, "events")
+    JdbcSink.bulkAppend(Tables.orders(spark, sf0001).select("o_orderkey", "o_custkey"),
+      url, "orders")
     exec("CREATE TABLE ev_sink (id BIGINT, tag VARCHAR(50))")
     exec("CREATE TABLE other_sink (id BIGINT, tag VARCHAR(50))")
-    val in = ConfigText.parseInput(
+    val source =
       """<source>
+        |  adapter derby
+        |  database memory:graftdb;create=true
         |  tag_prefix db
         |  select_limit 300
         |  <table>
@@ -171,7 +180,8 @@ class JdbcSpec extends SparkSpecBase {
         |    table orders
         |    update_column o_orderkey
         |  </table>
-        |</source>""".stripMargin)
+        |</source>""".stripMargin
+    val in = ConfigText.parseInput(source)
     val out = ConfigText.parseOutput(
       """<match db.**>
         |  remove_tag_prefix db
@@ -184,15 +194,29 @@ class JdbcSpec extends SparkSpecBase {
         |    column_mapping o_orderkey:id,tag
         |  </table>
         |</match>""".stripMargin)
-    val runner = new KeysetTailRunner(spark, in,
-      (s, t) => Tables.table(s, sf0001, t), new MemoryStateStore)
-    val total = runner.drain((tag, df) =>
-      JdbcSink.writeRouted(df.withColumn("tag", lit(tag)), out, url))
+    // the cron schedule: one AvailableNow run drains both tables and stops;
+    // records (Derby upper-cases names) project to the mapped columns
+    val total = new java.util.concurrent.atomic.AtomicLong
+    val q = graft.streaming.KeysetTail.multiReader(spark,
+        ConfigText.parseInputConnection(source), in).load()
+      .writeStream
+      .foreachBatch { (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
+        total.addAndGet(b.count())
+        val dead = JdbcSink.writeRouted(b.select(col("tag"),
+          col("record")("EVENT_ID").cast("bigint").as("event_id"),
+          col("record")("O_ORDERKEY").cast("bigint").as("o_orderkey")), out, url)
+        if (dead.nonEmpty) fail(s"dead letters in ${dead.keySet}")
+      }
+      .option("checkpointLocation",
+        java.nio.file.Files.createTempDirectory("graft_cfg_cp").toString)
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
+    try assert(q.awaitTermination(120000)) finally q.stop()
+    assert(q.exception.isEmpty, q.exception)
     val ev = spark.read.jdbc(url, "ev_sink", new java.util.Properties())
     val other = spark.read.jdbc(url, "other_sink", new java.util.Properties())
     assert(ev.count() === 1000)      // all events, routed by stripped tag
     assert(other.count() === 1500)   // orders fall through to the default
-    assert(total === 2500)
+    assert(total.get === 2500)
     assert(ev.select("tag").distinct().collect().map(_.getString(0)).toSet === Set("events"))
     assert(ev.agg(countDistinct(col("id"))).collect().head.getLong(0) === 1000)
   }
@@ -251,7 +275,7 @@ class JdbcSpec extends SparkSpecBase {
 
     // READ: Spark's JDBC reader runs sessionInitStatement per session, so
     // the unqualified keyset page resolves inside INGEST
-    val page = JdbcSource.keysetPage(spark, cc.jdbcUrl, "sp_logs", "id",
+    val page = JdbcSource.keysetPage(spark, cc.jdbcUrl, "sp_logs", "id", LongType,
       last = None, limit = 10, props = cc.properties, fetchFirstSyntax = true)
       .collect()
     assert(page.map(_.getLong(0)).toSet === Set(1L, 2L))

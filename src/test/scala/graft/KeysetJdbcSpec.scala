@@ -20,6 +20,14 @@ class KeysetJdbcSpec extends SparkSpecBase {
     finally c.close()
   }
 
+  /** The referee: each non-NULL field of a typed row through
+    * `Serialize.valueToString`, NULL fields absent. */
+  private def rowToStringMap(schema: StructType, row: Row): Map[String, String] =
+    schema.fields.zipWithIndex.collect {
+      case (f, i) if !row.isNullAt(i) =>
+        f.name -> Serialize.valueToString(f.dataType, row.get(i), fmt)
+    }.toMap
+
   private def readAll(p: KeysetRange): Seq[InternalRow] = {
     val r = new KeysetRangeReader(p)
     val out = scala.collection.mutable.ArrayBuffer.empty[InternalRow]
@@ -51,7 +59,7 @@ class KeysetJdbcSpec extends SparkSpecBase {
     val toRow = CatalystTypeConverters.createToScalaConverter(schema)
     val typed = readAll(range(None))
       .map(r => toRow(r).asInstanceOf[Row])
-      .map(r => Serialize.rowToStringMap(schema, r, fmt))
+      .map(r => rowToStringMap(schema, r))
     val events = readAll(range(Some(KeysetRange.Event("kj", fmt, 0)))).map { r =>
       assert(r.getUTF8String(0).toString === "kj")
       val m = r.getMap(1)

@@ -637,6 +637,60 @@ class MultiTailSpec extends SparkSpecBase {
     assert(byTag("DISC_TWO").size === 4)
   }
 
+  /** Drain one table through the multi tail: each row's serialized UPD. */
+  private def drainUpd(table: String, limit: Int): Seq[String] = {
+    import graft.core.{ConnectionConfig, InputConfig, SourceTableConfig}
+    val cc = ConnectionConfig(adapter = "derby", database = "memory:graftmt12;create=true")
+    val cfg = InputConfig(Seq(SourceTableConfig(table, updateColumn = Some("upd"))),
+      selectLimit = limit)
+    val got = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val q = graft.streaming.KeysetTail.multiReader(spark, cc, cfg).load()
+      .writeStream
+      .foreachBatch { (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
+        b.collect().foreach(r => got.add(r.getMap[String, String](1)("UPD")))
+      }
+      .option("checkpointLocation",
+        java.nio.file.Files.createTempDirectory("graft_lit_cp").toString).start()
+    try q.processAllAvailable() finally q.stop()
+    import scala.jdk.CollectionConverters._
+    got.asScala.toSeq
+  }
+
+  test("VARCHAR update column: a digits-only boundary like 010 stays a quoted string") {
+    // Derby refuses VARCHAR > BIGINT (42818): quoting follows the column
+    // type, not whether the value looks numeric
+    exec("CREATE TABLE mt_vc (upd VARCHAR(10) NOT NULL PRIMARY KEY, v BIGINT)")
+    Seq("001", "005", "010", "020", "030").zipWithIndex
+      .foreach { case (k, i) => exec(s"INSERT INTO mt_vc VALUES ('$k', $i)") }
+    assert(drainUpd("mt_vc", 3).sorted === Seq("001", "005", "010", "020", "030"))
+  }
+
+  test("DOUBLE update column: an E-notation boundary like 1.0E10 stays bare") {
+    // Double.toString switches to E-notation at 1e7; a quoted '1.0E10'
+    // is a DOUBLE > CHAR comparison Derby refuses (42818)
+    exec("CREATE TABLE mt_dbl (upd DOUBLE NOT NULL, v BIGINT)")
+    Seq(5e9, 1e10, 2e10, 3e10).zipWithIndex
+      .foreach { case (d, i) => exec(s"INSERT INTO mt_dbl VALUES ($d, $i)") }
+    assert(drainUpd("mt_dbl", 2).sorted === Seq("1.0E10", "2.0E10", "3.0E10", "5.0E9"))
+  }
+
+  test("keyset SQL: the update column's type picks the literal form") {
+    import org.apache.spark.sql.types.{DoubleType, LongType, StringType}
+    import graft.sources.JdbcSource
+    // BIGINT keeps the bytes of the value-guessing form it replaced
+    assert(JdbcSource.pageQuery("u AS page_u", "t", "u", LongType, Some("42"), 500, false) ===
+      "SELECT u AS page_u FROM t WHERE u > 42 ORDER BY u ASC LIMIT 500")
+    assert(JdbcSource.rangeQuery(Seq("a", "u"), "t", "u", LongType, Some("42"), "99") ===
+      "SELECT a, u FROM t WHERE 42 < u AND u <= 99")
+    assert(JdbcSource.pageQuery("*", "t", "u", StringType, Some("010"), 0, false) ===
+      "SELECT * FROM t WHERE u > '010'")
+    assert(JdbcSource.rangeQuery(Seq("u"), "t", "u", DoubleType, None, "1.0E10") ===
+      "SELECT u FROM t WHERE u <= 1.0E10")
+    // an AvailableNow target caps the page with the range predicate
+    assert(JdbcSource.pageQuery("*", "t", "u", LongType, Some("42"), 5, true, Some("99")) ===
+      "SELECT * FROM t WHERE 42 < u AND u <= 99 ORDER BY u ASC FETCH FIRST 5 ROWS ONLY")
+  }
+
   test("KeysetMultiOffset: tag-map offsets round-trip JSON, one line, escapes intact") {
     import graft.streaming.KeysetMultiOffset
     val o = KeysetMultiOffset(Map(

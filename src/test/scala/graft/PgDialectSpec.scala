@@ -3,6 +3,7 @@ package graft
 import java.sql.DriverManager
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.LongType
 
 import graft.core.ConnectionConfig
 import graft.sinks.JdbcSink
@@ -52,11 +53,11 @@ class PgDialectSpec extends SparkSpecBase {
 
   test("page: keyset pages through the PG LIMIT branch (translated at the shim), strict > resume") {
     fixture
-    val p1 = JdbcSource.keysetPage(spark, url, cc.qualify("pgt"), "id", None, 12,
+    val p1 = JdbcSource.keysetPage(spark, url, cc.qualify("pgt"), "id", LongType, None, 12,
       cc.properties, fetchFirstSyntax = false).collect()
     assert(p1.length === 12)
     val boundary = p1.map(_.getLong(0)).max
-    val p2 = JdbcSource.keysetPage(spark, url, cc.qualify("pgt"), "id",
+    val p2 = JdbcSource.keysetPage(spark, url, cc.qualify("pgt"), "id", LongType,
       Some(boundary.toString), 12, cc.properties, fetchFirstSyntax = false).collect()
     assert(p2.map(_.getLong(0)).min === boundary + 1) // strict >
     assert(p2.length === 12)
@@ -174,7 +175,7 @@ class PgDialectSpec extends SparkSpecBase {
     // keyset page over the quoted mixed-case update column (the providers
     // quote through JdbcDialects.get — this is that path's PG row)
     val q = org.apache.spark.sql.jdbc.JdbcDialects.get(url).quoteIdentifier("Id")
-    val page = JdbcSource.keysetPage(spark, url, "pgapp.mixed_pg", q,
+    val page = JdbcSource.keysetPage(spark, url, "pgapp.mixed_pg", q, LongType,
       Some("4"), 3, props, fetchFirstSyntax = false).collect()
     assert(page.map(_.getLong(0)).toSeq === Seq(5L, 6L, 7L))
   }

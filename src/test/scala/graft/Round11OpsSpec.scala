@@ -8,8 +8,7 @@ import org.apache.spark.sql.connector.read.streaming.ReadLimit
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
-import graft.core.{InputConfig, SourceTableConfig}
-import graft.sources.{FileStateStore, KeysetTailRunner, Tables}
+import graft.sources.Tables
 import graft.streaming.{JdbcMode, KeysetRange, KeysetMicroBatchStream, KeysetOffset, ParquetMode}
 
 /** Round-11 guards: the JDBC read mode of the keyset-tail streaming source
@@ -381,12 +380,12 @@ class Round11OpsSpec extends SparkSpecBase {
     val cc = graft.core.ConnectionConfig(adapter = "derby",
       database = "memory:graftdb11;create=true",
       schemaSearchPath = Some("TAILSCHEMA"))
-    val readers = graft.streaming.KeysetTail.readers(spark, cc, in)
-    assert(readers.keySet === Set("readings")) // tag defaults to table name
+    val t = in.tables.head
+    assert(t.resolvedTag(in.tagPrefix) === "readings") // tag defaults to table name
     // select_interval (default 60 s) maps onto the trigger
     assert(graft.streaming.KeysetTail.trigger(in) ===
       org.apache.spark.sql.streaming.Trigger.ProcessingTime(60000L))
-    val q = readers("readings").load()
+    val q = graft.streaming.KeysetTail.reader(spark, cc, t, in.selectLimit).load()
       .writeStream.format("memory").queryName("r11_cfg_tail")
       .trigger(Trigger.ProcessingTime(0)).start()
     try {
@@ -479,38 +478,6 @@ class Round11OpsSpec extends SparkSpecBase {
       r.close(); buf
     }
     assert(got.length === 905 && got.toSet === keys.toSet)
-  }
-
-  test("runner with select_limit <= 0 walks value-delimited chunks — bounded driver, ties travel whole") {
-    val dir = java.nio.file.Files.createTempDirectory("r11_runner").toString
-    // 1000 rows in tie groups of 7 (143 values): internal chunks of 150
-    // never align with group edges, so every chunk boundary splits a tie
-    // group that the value-delimited walk must carry whole
-    spark.range(0, 1000).selectExpr("id", "CAST(id / 7 AS BIGINT) AS upd")
-      .coalesce(1).write.mode("overwrite").parquet(dir)
-    val f = java.nio.file.Files.createTempFile("r11_runner_state", ".json").toString
-    val cfg = InputConfig(Seq(SourceTableConfig("chunky", updateColumn = Some("upd"))),
-      selectLimit = 0) // reference-legal: disables the LIMIT (in_sql.rb:52)
-    var emits = 0
-    var seen = Vector.empty[Long]
-    var maxChunk = 0
-    val runner = new KeysetTailRunner(spark, cfg,
-      (s, _) => s.read.parquet(dir), new FileStateStore(f),
-      internalChunkRows = 150)
-    val counts = runner.pollOnce { (_, df) =>
-      val ids = df.select("id").collect().map(_.getLong(0))
-      emits += 1; maxChunk = math.max(maxChunk, ids.length); seen = seen ++ ids
-    }
-    assert(counts === Map("chunky" -> 1000L))
-    assert(emits >= 6, s"expected chunked emits, got $emits") // ~1000/150
-    // the driver never held the whole table: each chunk is ~150 rows plus
-    // at most one tie group's spill
-    assert(maxChunk <= 150 + 7, s"chunk exceeded the internal bound: $maxChunk")
-    assert(seen.length === 1000 && seen.toSet === (0L until 1000L).toSet)
-    // drained: resume state is the final boundary; next poll emits nothing
-    assert(new FileStateStore(f).lastRecord("chunky").get("upd") === "142")
-    assert(runner.pollOnce((_, _) => fail("drained table must not emit")) ===
-      Map("chunky" -> 0L))
   }
 
   test("texttiling kernel dots equal the relational explode-per-gap referee") {

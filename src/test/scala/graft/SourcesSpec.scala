@@ -99,30 +99,3 @@ class KeysetScanSpec extends SparkSpecBase {
       s"filter not pushed:\n$plan")
   }
 }
-
-class StateStoreSpec extends SparkSpecBase {
-  test("file store persists and reloads the per-table map (in_sql.rb:280-307)") {
-    val f = Files.createTempFile("graft_state", ".json")
-    val s1 = new FileStateStore(f.toString)
-    assert(s1.lastRecord("t1").isEmpty)
-    s1.update("t1", Map("id" -> "42", "ts" -> "2024-01-01 00:00:00.000000+0000"))
-    s1.update("t2", Map("id" -> "7"))
-    val s2 = new FileStateStore(f.toString)
-    assert(s2.lastRecord("t1").get("id") === "42")
-    assert(s2.snapshot.keySet === Set("t1", "t2"))
-  }
-  test("empty state file tolerated (in_sql.rb:288-301)") {
-    val f = Files.createTempFile("graft_state_empty", ".json")
-    val s = new FileStateStore(f.toString)
-    assert(s.snapshot.isEmpty)
-  }
-  test("broken state file rejected") {
-    val f = Files.createTempFile("graft_state_bad", ".json")
-    Files.write(f, "null".getBytes)
-    intercept[IllegalStateException](new FileStateStore(f.toString))
-  }
-  test("discovery skips system tables (in_sql.rb:214-230)") {
-    assert(Tables.discover(sf0001).contains("events"))
-    assert(!Tables.discover(sf0001).contains("schema_migrations"))
-  }
-}

@@ -5,8 +5,11 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
-import graft.core.{InputConfig, SourceTableConfig}
-import graft.sources.{FileStateStore, KeysetTailRunner, MemoryStateStore, Tables}
+import scala.jdk.CollectionConverters._
+
+import graft.core.{ConnectionConfig, InputConfig, SourceTableConfig}
+import graft.sources.Tables
+import graft.streaming.KeysetTail
 
 class StreamingSpec extends SparkSpecBase {
 
@@ -156,8 +159,8 @@ class StreamingSpec extends SparkSpecBase {
     // group: upd values 1,2,2,2,3,4 and a 2-row page limit put the
     // serialized boundary ("2") in the middle of three upd=2 rows. The
     // reference's row-limit paging would SKIP the other two on resume
-    // (see the RunnerSpec twin below — the batch runner mirrors that
-    // contract faithfully). The streaming provider instead delimits each
+    // (strict `>` past a row-limited page, in_sql.rb:131). The streaming
+    // provider instead delimits each
     // micro-batch by the boundary VALUE — planInputPartitions takes every
     // row in (start, end] — so a tie group always travels whole and a
     // crash-restart at the boundary is exactly-once with NO skipped rows:
@@ -204,98 +207,118 @@ class StreamingSpec extends SparkSpecBase {
   }
 }
 
+/** The batch/cron run: `Trigger.AvailableNow` on `keyset-tail-multi`.
+  * Each run drains every live table up to its `MAX(upd)` at run start in
+  * `select_limit` pages and stops by itself; the checkpoint's offset log is
+  * the reference's `state_file` (`in_sql.rb:255-278, 280-307`). */
 class RunnerSpec extends SparkSpecBase {
-  private def cfg(tables: SourceTableConfig*) =
-    InputConfig(tables.toSeq, tagPrefix = Some("db"), selectLimit = 300)
+  private val cc = ConnectionConfig(adapter = "derby",
+    database = "memory:graftrun;create=true")
+
+  private def exec(sql: String): Unit = {
+    val c = java.sql.DriverManager.getConnection(cc.jdbcUrl)
+    try { val s = c.createStatement(); try s.execute(sql) finally s.close() }
+    finally c.close()
+  }
+
+  /** Rows `(id, id / 7)` into a `(id, upd)` table. */
+  private def insert(table: String, ids: Seq[Long]): Unit = {
+    val c = java.sql.DriverManager.getConnection(cc.jdbcUrl)
+    try {
+      val ps = c.prepareStatement(s"INSERT INTO $table VALUES (?, ?)")
+      ids.foreach { i => ps.setLong(1, i); ps.setLong(2, i / 7); ps.executeUpdate() }
+    } finally c.close()
+  }
+
+  private def table(name: String, ids: Seq[Long]): Unit = {
+    exec(s"CREATE TABLE $name (id BIGINT NOT NULL PRIMARY KEY, upd BIGINT)")
+    insert(name, ids)
+  }
+
+  /** One cron run to its own end: `(batchId, tag, record)` per emitted row.
+    * `onBatch` runs inside each batch, after its rows are collected. */
+  private def run(cfg: InputConfig, cp: String, onBatch: Long => Unit = _ => ())
+      : Seq[(Long, String, Map[String, String])] = {
+    val got = new java.util.concurrent.ConcurrentLinkedQueue[(Long, String, Map[String, String])]()
+    val q = KeysetTail.multiReader(spark, cc, cfg).load()
+      .writeStream
+      .foreachBatch { (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
+        b.collect().foreach(r => got.add((id, r.getString(0), r.getMap[String, String](1).toMap)))
+        onBatch(id)
+      }
+      .option("checkpointLocation", cp)
+      .trigger(Trigger.AvailableNow()).start()
+    try assert(q.awaitTermination(120000), "an AvailableNow run must end by itself")
+    finally q.stop()
+    assert(q.exception.isEmpty, q.exception)
+    got.asScala.toSeq
+  }
+
+  private def ids(rows: Seq[(Long, String, Map[String, String])]): Seq[Long] =
+    rows.map(_._3("ID").toLong).sorted
+
+  private def latestOffset(cp: String): String = {
+    val latest = Files.list(java.nio.file.Paths.get(cp, "offsets")).iterator().asScala
+      .filter(_.getFileName.toString.forall(_.isDigit))
+      .maxBy(_.getFileName.toString.toLong)
+    new String(Files.readAllBytes(latest), "UTF-8")
+  }
+
+  private def cfg(limit: Int, tables: String*): InputConfig =
+    InputConfig(tables.map(t => SourceTableConfig(t, updateColumn = Some("id"))),
+      tagPrefix = Some("db"), selectLimit = limit)
 
   test("poll cycle: page, emit, then state update; drain to exhaustion") {
-    val store = new MemoryStateStore
-    val runner = new KeysetTailRunner(spark, cfg(
-      SourceTableConfig("events", updateColumn = Some("event_id"))),
-      (s, t) => Tables.table(s, t match { case "events" => sf0001 }, t), store)
-    var emitted = 0L
-    var tags = Set.empty[String]
-    val total = runner.drain((tag, df) => { emitted += df.count(); tags += tag })
-    assert(total === 1000 && emitted === 1000)
-    assert(tags === Set("db.events"))
-    assert(store.lastRecord("events").get("event_id") === "999")
+    table("run_a", 1L to 130L)
+    val cp = Files.createTempDirectory("graft_run_a").toString
+    val got = run(cfg(40, "run_a"), cp)
+    assert(ids(got) === (1L to 130L)) // every row exactly once
+    assert(got.map(_._2).toSet === Set("db.run_a"))
+    val batches = got.groupBy(_._1).values.map(_.size)
+    assert(batches.size >= 3 && batches.forall(_ <= 40), batches)
+    // the state: the last committed offset holds the final boundary
+    assert(latestOffset(cp).contains("\"db.run_a\":\"130\""), latestOffset(cp))
   }
 
   test("state file persists across runners (in_sql.rb:280-307) — resume, not replay") {
-    val f = Files.createTempFile("graft_runner_state", ".json").toString
-    val load = (s: org.apache.spark.sql.SparkSession, t: String) => Tables.table(s, sf0001, t)
-    val c = cfg(SourceTableConfig("events", updateColumn = Some("event_id")))
-    val r1 = new KeysetTailRunner(spark, c, load, new FileStateStore(f))
-    r1.pollOnce((_, _) => ()) // first page: 300 rows
-    val r2 = new KeysetTailRunner(spark, c, load, new FileStateStore(f))
-    var firstId = -1L
-    r2.pollOnce((_, df) => firstId = df.agg(min("event_id")).collect().head.getLong(0))
-    assert(firstId === 300) // resumed strictly after the persisted boundary
-  }
-
-  test("all_tables discovery: tag = table name, unresolvable tables dropped (in_sql.rb:214-230)") {
-    val store = new MemoryStateStore
-    val updFor = Map("events" -> "event_id", "orders" -> "o_orderkey").get _
-    val runner = KeysetTailRunner.discovering(spark, sf0001, store, updFor,
-      tagPrefix = Some("db"), selectLimit = 400)
-    // all 10 parquet tables discovered; only the two resolvable ones survive
-    assert(runner.activeTables.map(_.table).sorted === Seq("events", "orders"))
-    var tags = Set.empty[String]
-    val counts = runner.pollOnce((tag, _) => tags += tag)
-    assert(counts === Map("events" -> 400L, "orders" -> 400L))
-    assert(tags === Set("db.events", "db.orders"))
-  }
-
-  test("crash at a page boundary inside a tie group: strict-> resume SKIPS the rest of the group (in_sql.rb:131, SURVEY §2.1)") {
-    // The batch runner mirrors the reference's ROW-LIMIT paging exactly,
-    // so the documented skip semantics are observable here: upd values
-    // 1,2,2,2,3,4 with select_limit=2 put the page boundary at the first
-    // of three upd=2 rows; the persisted resume value is the SERIALIZED
-    // STRING "2" and the next poll's strict `upd > '2'` never sees the
-    // other two tie rows — skipped, not replayed, not duplicated. (The
-    // streaming provider deliberately improves on this with value-
-    // delimited batches — see the StreamingSpec tie-group test.)
-    val dir = Files.createTempDirectory("graft_runner_ties").toString
-    spark.createDataFrame(Seq(
-        (10L, 1L), (20L, 2L), (21L, 2L), (22L, 2L), (30L, 3L), (40L, 4L)))
-      .toDF("id", "upd")
-      .coalesce(1).write.mode("overwrite").parquet(dir)
-    val f = Files.createTempFile("graft_ties_state", ".json").toString
-    val load = (s: org.apache.spark.sql.SparkSession, t: String) =>
-      s.read.parquet(dir)
-    val c = InputConfig(Seq(SourceTableConfig("ties", updateColumn = Some("upd"))),
-      selectLimit = 2)
-    var seen = Vector.empty[(Long, Long)]
-    val collect = (tag: String, df: org.apache.spark.sql.DataFrame) =>
-      seen = seen ++ df.select("id", "upd").collect()
-        .map(r => (r.getLong(0), r.getLong(1)))
-    val r1 = new KeysetTailRunner(spark, c, load, new FileStateStore(f))
-    assert(r1.pollOnce(collect) === Map("ties" -> 2L)) // page 1: upd 1, 2(first)
-    assert(seen.map(_._2) === Vector(1L, 2L))
-    // "crash": the runner dies after the state write; the persisted resume
-    // value is the serialized STRING boundary, exactly like the YAML file
-    val persisted = new FileStateStore(f).lastRecord("ties").get("upd")
-    assert(persisted === "2")
-    // restart from the state file: strict > '2' → upd 3, 4. The two
-    // remaining upd=2 rows are SKIPPED — the reference contract
-    val r2 = new KeysetTailRunner(spark, c, load, new FileStateStore(f))
-    assert(r2.pollOnce(collect) === Map("ties" -> 2L))
-    assert(seen.map(_._2) === Vector(1L, 2L, 3L, 4L))
-    assert(seen.map(_._1).count(Set(20L, 21L, 22L)) === 1) // 2 of 3 ties skipped
-    // drained: nothing left, the skipped rows never arrive
-    assert(r2.pollOnce(collect).getOrElse("ties", 0L) === 0L)
-    assert(seen.length === 4)
+    table("run_b", 1L to 100L)
+    val cp = Files.createTempDirectory("graft_run_b").toString
+    // rows written while the run is under way lie past its target: they
+    // wait for the next run instead of keeping this one alive
+    val first = run(cfg(40, "run_b"), cp,
+      onBatch = id => if (id == 0) insert("run_b", 101L to 110L))
+    assert(ids(first) === (1L to 100L))
+    assert(ids(run(cfg(40, "run_b"), cp)) === (101L to 110L)) // resumed, once
+    assert(run(cfg(40, "run_b"), cp).isEmpty)                 // drained
   }
 
   test("per-table fault isolation (in_sql.rb:233-243, 272-275)") {
-    val store = new MemoryStateStore
-    val c = cfg(
-      SourceTableConfig("nope", updateColumn = Some("missing")),     // init failure → dropped
-      SourceTableConfig("events", updateColumn = Some("event_id")))
-    val runner = new KeysetTailRunner(spark, c,
-      (s, t) => Tables.table(s, sf0001, t), store)
-    assert(runner.activeTables.map(_.table) === Seq("events")) // bad table dropped
-    val counts = runner.pollOnce((_, _) => ())
-    assert(counts("events") === 300) // healthy table unaffected
+    table("run_ok", 1L to 50L)
+    table("run_gone", 1L to 50L)
+    val cp = Files.createTempDirectory("graft_run_iso").toString
+    // run_never fails init and is dropped; run_gone's polls fail from
+    // batch 1 on and it is held — neither keeps the run from ending
+    val got = run(cfg(10, "run_ok", "run_gone", "run_never"), cp,
+      onBatch = id => if (id == 0) exec("DROP TABLE run_gone"))
+    val byTag = got.groupBy(_._2)
+    assert(byTag.keySet === Set("db.run_ok", "db.run_gone"))
+    assert(ids(byTag("db.run_ok")) === (1L to 50L))
+    assert(ids(byTag("db.run_gone")) === (1L to 10L))
+    assert(latestOffset(cp).contains("\"db.run_gone\":\"10\""), latestOffset(cp))
+  }
+
+  test("select_limit <= 0: one AvailableNow batch per run, tie groups whole") {
+    // 1000 rows in tie groups of 7 on upd (values 0..142); select_limit 0
+    // disables paging (in_sql.rb:52): each run reads (last, target] whole
+    table("run_ties", 0L until 1000L)
+    val c = InputConfig(Seq(SourceTableConfig("run_ties", updateColumn = Some("upd"))),
+      selectLimit = 0)
+    val cp = Files.createTempDirectory("graft_run_ties").toString
+    val first = run(c, cp, onBatch = id => if (id == 0) insert("run_ties", 1001L to 1014L))
+    assert(first.map(_._1).distinct.size === 1)
+    assert(ids(first) === (0L until 1000L))
+    assert(latestOffset(cp).contains("\"run_ties\":\"142\""), latestOffset(cp))
+    // the next run takes the rows past the old target (upd 143, 144), once
+    assert(ids(run(c, cp)) === (1001L to 1014L))
   }
 }
