@@ -6,17 +6,14 @@ import java.util.Properties
 import scala.collection.mutable
 import scala.util.Using
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.{DataType, NumericType}
 
 import graft.core.SystemTables
 
 /** JDBC input shell — the reference's ActiveRecord connection + reflection
-  * surface (`in_sql.rb:188-230`) on Spark's JDBC source.
-  *
-  * The keyset page is pushed down INSIDE the dbtable subquery so the
-  * database (with its index on the update column, `README.md:100-102`)
-  * does the WHERE/ORDER/LIMIT — Spark never scans the full table.
+  * surface (`in_sql.rb:188-230`), and the keyset SQL the tail's driver-side
+  * poll and executor-side range reads send, so the database (with its index
+  * on the update column, `README.md:100-102`) does the WHERE/ORDER/LIMIT.
   */
 object JdbcSource {
 
@@ -62,8 +59,8 @@ object JdbcSource {
   /** The keyset page `SELECT cols FROM t WHERE upd > last ORDER BY upd ASC
     * LIMIT n` (`in_sql.rb:129-135`); `limit <= 0` disables the limit
     * (`in_sql.rb:52`). ORDER BY only when a LIMIT defines the page through
-    * it: an unbounded page is the whole remaining range, and its
-    * aggregation/sub-range consumers don't need order — leaving the ORDER BY
+    * it: an unbounded page is the whole remaining range, and its one
+    * consumer (the tail's `MAX` poll) doesn't need order — leaving the ORDER BY
     * in would make unindexed databases sort the full remainder per poll for
     * nothing (planners are NOT guaranteed to elide a subquery ORDER BY).
     * `hi` caps the page from above with [[rangeQuery]]'s `(last, hi]`
@@ -80,16 +77,6 @@ object JdbcSource {
     else s"SELECT $select FROM $table $where ORDER BY $updateColumn ASC " +
       pageLimit(limit, fetchFirst)
   }
-
-  /** [[pageQuery]] pushed INTO the remote DB as Spark's JDBC dbtable
-    * subquery, so the database's index answers it. `fetchFirstSyntax`
-    * covers LIMIT-less dialects ([[fetchFirstDialect]]). */
-  def keysetPage(spark: SparkSession, url: String, table: String, updateColumn: String,
-                 updType: DataType, last: Option[String], limit: Int,
-                 props: Properties = new Properties(),
-                 fetchFirstSyntax: Boolean = false): DataFrame =
-    spark.read.jdbc(url, s"(${pageQuery("*", table, updateColumn, updType, last, limit,
-      fetchFirstSyntax)}) page", props)
 
   /** `all_tables` discovery via JDBC catalog metadata, skipping system
     * tables (`in_sql.rb:214-230`, skip `in_sql.rb:183`). Catalog listing is

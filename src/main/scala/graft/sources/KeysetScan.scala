@@ -30,10 +30,9 @@ import graft.core.RubyStrftime
   */
 object KeysetScan {
 
-  /** A serialized resume value as a typed Column — the ONE parse used by
-    * every keyset comparison (driver filter, streaming sub-range bounds),
-    * so boundary semantics can never diverge between them. */
-  def typedBound(dt: DataType, serialized: String,
+  /** A serialized resume value as a typed Column: timestamps parse with
+    * the table's time format, every other type casts. */
+  private def typedBound(dt: DataType, serialized: String,
                  rubyTimeFormat: String = RubyStrftime.DefaultRubyFormat): Column =
     dt match {
       case TimestampType =>

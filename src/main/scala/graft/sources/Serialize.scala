@@ -28,11 +28,7 @@ object Serialize {
                     rubyTimeFormat: String = RubyStrftime.DefaultRubyFormat): String =
     dt match {
       case TimestampType =>
-        // Locale.US to match Spark's own DateTimeFormatter locale — month/
-        // day NAMES must render identically on both serialization paths
-        val fmt = java.time.format.DateTimeFormatter
-          .ofPattern(RubyStrftime.toSparkPattern(rubyTimeFormat), java.util.Locale.US)
-          .withZone(sessionZone)
+        val fmt = formatter(rubyTimeFormat)
         v match {
           case t: java.sql.Timestamp  => fmt.format(t.toInstant)
           case i: java.time.Instant   => fmt.format(i)
@@ -40,4 +36,24 @@ object Serialize {
         }
       case _ => v.toString
     }
+
+  /** Whether `s` reads back as a value of `dt` — the inverse of
+    * [[valueToString]]: timestamps through the same formatter, dates and
+    * numbers through their string form, every other type always. */
+  def parses(dt: DataType, s: String, rubyTimeFormat: String): Boolean =
+    scala.util.Try(dt match {
+      case TimestampType => formatter(rubyTimeFormat).parse(s)
+      case DateType      => java.sql.Date.valueOf(s)
+      case LongType | IntegerType | ShortType | ByteType => BigInt(s)
+      case FloatType | DoubleType => s.toDouble
+      case _: DecimalType => BigDecimal(s)
+      case _             => ()
+    }).isSuccess
+
+  // Locale.US to match Spark's own DateTimeFormatter locale — month/day
+  // NAMES must render identically on both serialization paths
+  private def formatter(rubyTimeFormat: String) =
+    java.time.format.DateTimeFormatter
+      .ofPattern(RubyStrftime.toSparkPattern(rubyTimeFormat), java.util.Locale.US)
+      .withZone(sessionZone)
 }

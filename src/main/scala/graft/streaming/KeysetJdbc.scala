@@ -13,18 +13,18 @@ import org.apache.spark.unsafe.types.UTF8String
 import graft.core.RubyStrftime
 import graft.sources.{JdbcSource, Serialize}
 
-/** The JDBC keyset cursor under both streaming tails — `keyset-tail`
-  * (typed rows, percentile sub-range partitions) and `keyset-tail-multi`
-  * (tagged events, one partition per advanced table). The reference has ONE
-  * input loop running ONE query shape, `WHERE upd > last ORDER BY upd
-  * LIMIT n` then emit then checkpoint (`in_sql.rb:129-135, 269-271`); its
-  * JDBC half lives here once: connection options, identifier quoting,
-  * update-column resolution and the zone guard, the typed column getter,
-  * and the `(lo, hi]` range partition ([[KeysetRange]]) with its
-  * executor-side reader ([[KeysetRangeReader]]). The SQL strings themselves
-  * (literal, page, range, page-limit clause) are [[JdbcSource]]'s, shared
-  * with the Spark JDBC page scan (`JdbcSource.keysetPage`). Poll and
-  * planning policies stay with each stream.
+/** The JDBC keyset cursor under the one keyset tail
+  * ([[KeysetMultiMicroBatchStream]]) and its two output shapes —
+  * `keyset-tail` (one table's typed rows) and `keyset-tail-multi` (tagged
+  * events). The reference has ONE input loop running ONE query shape,
+  * `WHERE upd > last ORDER BY upd LIMIT n` then emit then checkpoint
+  * (`in_sql.rb:129-135, 269-271`); its JDBC half lives here once:
+  * connection options, identifier quoting, update-column resolution and
+  * the zone guard, the typed column getter, and the `(lo, hi]` range
+  * partition ([[KeysetRange]]) with its executor-side reader
+  * ([[KeysetRangeReader]]). The SQL strings themselves (literal, page,
+  * range, page-limit clause) are [[JdbcSource]]'s. Poll and planning
+  * policy is the stream's.
   */
 object KeysetJdbc {
   private val ConnKeys = Seq("user", "password", "driver", "sessionInitStatement")
@@ -213,9 +213,10 @@ final class KeysetRangeReader(p: KeysetRange) extends PartitionReader[InternalRo
     // while this range read has no LIMIT, so a coarse update column
     // (second-granular timestamps under heavy writes) makes whole tie
     // groups travel in one batch. The count only exists where the rows
-    // flow — an event range IS the table's entire batch (one partition per
-    // advanced table) — so the documented hazard is warned HERE, in
-    // production executor logs. Offsets stay exact either way.
+    // flow — a bounded page's event range IS the table's entire batch (one
+    // partition when maxRowsPerBatch <= RowsPerRange) — so the documented
+    // hazard is warned HERE, in production executor logs. Offsets stay
+    // exact either way.
     p.event.filter(e => e.pageBound > 0 && rowCount > 2L * e.pageBound).foreach { e =>
       KeysetRangeReader.tieInflation.put(p.tag, rowCount)
       System.err.println(s"[graft.keyset-tail-multi] TIE INFLATION: table " +

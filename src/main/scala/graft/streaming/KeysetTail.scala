@@ -5,11 +5,13 @@ import org.apache.spark.sql.streaming.DataStreamReader
 
 import graft.core.{ConnectionConfig, InputConfig, SourceTableConfig}
 
-/** Config → streaming-source glue: build the `format("keyset-tail")` reader
-  * for one tailed table straight from the parsed reference config
-  * (`ConfigText.parseInput` + `parseInputConnection`), so a reference user
-  * runs their existing `<source>` section through Structured Streaming
-  * without hand-assembling options.
+/** Config → streaming-source glue: build the keyset tail's reader straight
+  * from the parsed reference config (`ConfigText.parseInput` +
+  * `parseInputConnection`), so a reference user runs their existing
+  * `<source>` section through Structured Streaming without hand-assembling
+  * options. Both readers open the one stream
+  * ([[KeysetMultiMicroBatchStream]]): [[multiReader]] over every configured
+  * table as tagged events, [[reader]] over one table as its typed rows.
   *
   * Mapping (reference `in_sql.rb:28-66`): connection → `url` (+ JDBC
   * credentials and the schema-search-path session init, applied by the
@@ -49,8 +51,8 @@ object KeysetTail {
     * whole. Start it with [[trigger]] for the poll loop, or with
     * `Trigger.AvailableNow` for a batch/cron run that drains each table to
     * its `MAX(upd)` at start and stops; the checkpoint's offset log is the
-    * `state_file` either way. [[reader]] remains for one table that needs
-    * its own cadence or the typed sub-range planner. */
+    * `state_file` either way. [[reader]] is the same stream over one table,
+    * for a table that needs its own cadence or typed rows. */
   def multiReader(spark: SparkSession, cc: ConnectionConfig,
                   cfg: InputConfig): DataStreamReader = {
     var r = spark.readStream.format("keyset-tail-multi")

@@ -65,12 +65,11 @@ class DeadLetterSpec extends SparkSpecBase {
     exec("CREATE TABLE dl12 (\"record_json\" VARCHAR(2000), \"error\" VARCHAR(2000), " +
       "\"dest_table\" VARCHAR(64), \"batch_id\" BIGINT)")
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_dl_src").toString
-    (1L to 40L).map(i => (i, if (i == 17L) "poisoned-too-long" else s"v$i"))
-      .toDF("event_id", "v").coalesce(1).write.mode("overwrite").parquet(dir)
+    TailHarness.stage((1L to 40L).map(i => (i, if (i == 17L) "poisoned-too-long" else s"v$i"))
+      .toDF("event_id", "v"), url, "DL_SRC")
     val cp = java.nio.file.Files.createTempDirectory("graft_dl_cp").toString
     val stream = spark.readStream.format("keyset-tail")
-      .option("path", dir).option("updateColumn", "event_id")
+      .option("url", url).option("dbtable", "DL_SRC").option("updateColumn", "event_id")
       .option("maxRowsPerBatch", "15").load()
     val q = graft.sinks.JdbcSink.upsertStream(stream, url, "s12", Seq("event_id"),
         deadLetterTable = Some("dl12"))

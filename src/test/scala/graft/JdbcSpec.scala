@@ -3,7 +3,6 @@ package graft
 import java.sql.DriverManager
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.LongType
 
 import graft.sinks.JdbcSink
 import graft.sources.{JdbcSource, Tables}
@@ -67,14 +66,12 @@ class JdbcSpec extends SparkSpecBase {
   test("streaming upsert e2e: a FULL source replay leaves the table unchanged") {
     exec("CREATE TABLE s_ups (event_id BIGINT NOT NULL PRIMARY KEY, " +
       "event_type VARCHAR(20), value DOUBLE)")
-    val dir = java.nio.file.Files.createTempDirectory("graft_ups_src").toString
-    Tables.events(spark, sf0001).limit(120)
-      .select(col("event_id"), col("event_type"), col("value"))
-      .coalesce(1).write.mode("overwrite").parquet(dir)
+    TailHarness.stage(Tables.events(spark, sf0001).limit(120)
+      .select(col("event_id"), col("event_type"), col("value")), url, "UPS_SRC")
     def run(): Unit = {
       val cp = java.nio.file.Files.createTempDirectory("graft_ups_cp").toString
       val stream = spark.readStream.format("graft.streaming.KeysetTailProvider")
-        .option("path", dir).option("updateColumn", "event_id")
+        .option("url", url).option("dbtable", "UPS_SRC").option("updateColumn", "event_id")
         .option("maxRowsPerBatch", "50").load()
         .select(col("event_id"), col("event_type"), col("value"))
       val q = JdbcSink.upsertStream(stream, url, "s_ups", Seq("event_id"))
@@ -102,15 +99,17 @@ class JdbcSpec extends SparkSpecBase {
     val all = spark.read.jdbc(url, "logs", new java.util.Properties())
     assert(all.count() === 50)
 
-    // keyset resume: page 1 → boundary → page 2, strict >
-    val p1 = JdbcSource.keysetPage(spark, url, "logs", "id", LongType, None, 20,
-      fetchFirstSyntax = true)
-      .collect()
+    // keyset resume through the tail: page 1 → boundary → page 2, strict >
+    // (Derby has no LIMIT: the poll pages with FETCH FIRST)
+    val tail = TailHarness.tail(url, "logs", "id", 20) // Derby upper-cases: ID
+    val (o1, r1) = TailHarness.batch(tail, tail.initialOffset())
+    val p1 = r1.map(_.getLong(0)).sorted
     assert(p1.length === 20)
-    val boundary = p1.last.getLong(0) // Derby uppercases identifiers (ID)
-    val p2 = JdbcSource.keysetPage(spark, url, "logs", "id", LongType, Some(boundary.toString), 20,
-      fetchFirstSyntax = true).collect()
-    assert(p2.head.getLong(0) === boundary + 1)
+    val boundary = p1.last
+    assert(TailHarness.last(o1) === Some(boundary.toString))
+    val p2 = TailHarness.batch(tail, o1)._2.map(_.getLong(0)).sorted
+    assert(p2.head === boundary + 1)
+    tail.stop()
   }
 
   test("catalog discovery + PK introspection (in_sql.rb:107-114, 214-230)") {
@@ -134,12 +133,10 @@ class JdbcSpec extends SparkSpecBase {
       removeTagPrefix = Some("db"))
 
     // stage a tagged copy of events for the keyset tail
-    val dir = java.nio.file.Files.createTempDirectory("graft_routed").toString
-    Tables.events(spark, sf0001).limit(200)
-      .withColumn("tag", concat(lit("db."), col("event_type")))
-      .coalesce(1).write.mode("overwrite").parquet(dir)
+    TailHarness.stage(Tables.events(spark, sf0001).limit(200)
+      .withColumn("tag", concat(lit("db."), col("event_type"))), url, "ROUTED_SRC")
     val stream = spark.readStream.format("graft.streaming.KeysetTailProvider")
-      .option("path", dir).option("updateColumn", "event_id")
+      .option("url", url).option("dbtable", "ROUTED_SRC").option("updateColumn", "event_id")
       .option("maxRowsPerBatch", "75").load()
 
     val q = JdbcSink.routedStream(stream, cfg, url)
@@ -273,12 +270,15 @@ class JdbcSpec extends SparkSpecBase {
     assert(cc.jdbcUrl === url)
     assert(cc.properties.getProperty("sessionInitStatement") === "SET SCHEMA INGEST")
 
-    // READ: Spark's JDBC reader runs sessionInitStatement per session, so
-    // the unqualified keyset page resolves inside INGEST
-    val page = JdbcSource.keysetPage(spark, cc.jdbcUrl, "sp_logs", "id", LongType,
-      last = None, limit = 10, props = cc.properties, fetchFirstSyntax = true)
-      .collect()
+    // READ: the tail runs sessionInitStatement on every connection it
+    // opens (poll, read probe, executor reads), so the unqualified keyset
+    // page resolves inside INGEST
+    import scala.jdk.CollectionConverters._
+    val tail = TailHarness.stream(cc.properties.asScala.toMap ++ Map("url" -> cc.jdbcUrl,
+      "dbtable" -> "sp_logs", "updateColumn" -> "id", "maxRowsPerBatch" -> "10"))
+    val page = TailHarness.batch(tail, tail.initialOffset())._2
     assert(page.map(_.getLong(0)).toSet === Set(1L, 2L))
+    tail.stop()
 
     // DISCOVERY + PK: metadata connections apply the same init statement
     // and narrow the catalog listing to the session schema

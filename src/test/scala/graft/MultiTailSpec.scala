@@ -496,12 +496,8 @@ class MultiTailSpec extends SparkSpecBase {
         maxRowsPerBatch = 100, fetchFirst = true))
     assert(e1.getMessage.contains("mt_zg") && e1.getMessage.contains("%z") &&
       e1.getMessage.contains("zone-less"), e1.getMessage)
-    // single-table provider: same guard at stream construction
-    val schema = spark.read.jdbc(url, "mt_zg", new java.util.Properties()).schema
-    val e2 = intercept[IllegalArgumentException](
-      new graft.streaming.KeysetMicroBatchStream(schema,
-        graft.streaming.JdbcMode(url, "mt_zg", Map.empty, fetchFirst = true),
-        "upd", 100, graft.core.RubyStrftime.DefaultRubyFormat))
+    // single-table format: same guard at stream construction
+    val e2 = intercept[IllegalArgumentException](TailHarness.tail(url, "mt_zg", "upd", 100))
     assert(e2.getMessage.contains("mt_zg") && e2.getMessage.contains("time_format"))
     // %Z (zone NAME -> 'zzz', e.g. ' UTC') is equally rejected by Derby's
     // timestamp cast — the guard must cover it too (ADVICE r13)

@@ -2,8 +2,9 @@ package graft
 
 import java.sql.DriverManager
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.LongType
 
 import graft.core.ConnectionConfig
 import graft.sinks.JdbcSink
@@ -53,14 +54,20 @@ class PgDialectSpec extends SparkSpecBase {
 
   test("page: keyset pages through the PG LIMIT branch (translated at the shim), strict > resume") {
     fixture
-    val p1 = JdbcSource.keysetPage(spark, url, cc.qualify("pgt"), "id", LongType, None, 12,
-      cc.properties, fetchFirstSyntax = false).collect()
+    val tail = TailHarness.stream(cc.properties.asScala.toMap ++ Map("url" -> url,
+      "dbtable" -> cc.qualify("pgt"), "updateColumn" -> "id", "maxRowsPerBatch" -> "12"))
+    PgShimDriver.limitStatements.clear()
+    val (o1, r1) = TailHarness.batch(tail, tail.initialOffset())
+    val p1 = r1.map(_.getLong(0))
     assert(p1.length === 12)
-    val boundary = p1.map(_.getLong(0)).max
-    val p2 = JdbcSource.keysetPage(spark, url, cc.qualify("pgt"), "id", LongType,
-      Some(boundary.toString), 12, cc.properties, fetchFirstSyntax = false).collect()
-    assert(p2.map(_.getLong(0)).min === boundary + 1) // strict >
+    val boundary = p1.max
+    val p2 = TailHarness.batch(tail, o1)._2.map(_.getLong(0))
+    assert(p2.min === boundary + 1) // strict >
     assert(p2.length === 12)
+    // the PG URL pages with LIMIT, which the shim translated
+    assert(PgShimDriver.limitStatements.asScala.exists(_.contains("LIMIT 12")),
+      PgShimDriver.limitStatements)
+    tail.stop()
   }
 
   test("upsert: idempotent keyed upsert against the PG URL, replay is a no-op") {
@@ -172,12 +179,13 @@ class PgDialectSpec extends SparkSpecBase {
     assert(back.schema.fieldNames.toSeq === Seq("Id", "MixedCase"))
     assert(back.orderBy("Id").collect().map(r => (r.getLong(0), r.getString(1))).toSeq
       === (1 to 9).map(i => (i.toLong, s"m$i")))
-    // keyset page over the quoted mixed-case update column (the providers
-    // quote through JdbcDialects.get — this is that path's PG row)
-    val q = org.apache.spark.sql.jdbc.JdbcDialects.get(url).quoteIdentifier("Id")
-    val page = JdbcSource.keysetPage(spark, url, "pgapp.mixed_pg", q, LongType,
-      Some("4"), 3, props, fetchFirstSyntax = false).collect()
-    assert(page.map(_.getLong(0)).toSeq === Seq(5L, 6L, 7L))
+    // keyset page over the quoted mixed-case update column (the tail
+    // quotes through JdbcDialects.get — this is that path's PG row)
+    val tail = TailHarness.stream(props.asScala.toMap ++ Map("url" -> url,
+      "dbtable" -> "pgapp.mixed_pg", "updateColumn" -> "Id", "maxRowsPerBatch" -> "3"))
+    val page = TailHarness.batch(tail, TailHarness.at(Some("4")))._2
+    assert(page.map(_.getLong(0)).sorted === Seq(5L, 6L, 7L))
+    tail.stop()
   }
 
   test("tail: streaming keyset-tail over the PG URL — PostgresDialect quoting, LIMIT paging, resume") {

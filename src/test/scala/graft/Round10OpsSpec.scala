@@ -110,75 +110,63 @@ class Round10OpsSpec extends SparkSpecBase {
   }
 
   test("keyset partitions stay constant-size as the page grows (driver holds bounds, not rows)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_psize").toString
-    spark.range(0, 4000).selectExpr("id AS event_id", "id * 3 AS v")
-      .coalesce(2).write.mode("overwrite").parquet(dir)
-    val schema = spark.read.parquet(dir).schema
+    val url = "jdbc:derby:memory:graftr10;create=true"
+    TailHarness.stage(spark.range(0, 4000).selectExpr("id AS event_id", "id * 3 AS v"),
+      url, "R10_PSIZE")
     def partBytes(pageRows: Int): Int = {
-      val stream = new graft.streaming.KeysetMicroBatchStream(schema,
-        graft.streaming.ParquetMode(dir),
-        "event_id", maxRowsPerBatch = pageRows,
-        rubyTimeFormat = graft.core.RubyStrftime.DefaultRubyFormat,
-        maxRowsPerPartition = 250)
-      val start = stream.initialOffset()
-      val end = stream.latestOffset(start,
-        org.apache.spark.sql.connector.read.streaming.ReadLimit.maxRows(pageRows))
-      val parts = stream.planInputPartitions(start, end)
-      assert(parts.nonEmpty)
-      val bos = new java.io.ByteArrayOutputStream()
-      val oos = new java.io.ObjectOutputStream(bos)
-      oos.writeObject(parts.head); oos.close()
-      bos.size()
+      val stream = TailHarness.tail(url, "R10_PSIZE", "event_id", pageRows)
+      try {
+        val start = stream.initialOffset()
+        val end = TailHarness.poll(stream, start)
+        val parts = stream.planInputPartitions(start, end)
+        assert(parts.nonEmpty)
+        val bos = new java.io.ByteArrayOutputStream()
+        val oos = new java.io.ObjectOutputStream(bos)
+        oos.writeObject(parts.head); oos.close()
+        bos.size()
+      } finally stream.stop()
     }
     val small = partBytes(100)   // one sub-range of a 100-row page
     val big = partBytes(4000)    // one sub-range of a 40x larger page
-    // rows-in-partition would scale ~40x; bounds + file metadata do not
+    // rows-in-partition would scale ~40x; bounds + connection settings do not
     assert(big < small * 2 + 4096,
       s"partition payload grew with the page: $small -> $big bytes")
   }
 
   test("keyset reader timestamp bounds parse exactly like the driver filter across a resume") {
-    // timestamp update column through TWO planned batches: the second
-    // batch's lower bound is the serialized string of batch 1's boundary,
-    // so the executor-side residual must parse it to the same micros the
-    // driver-side KeysetScan filter does — reader row sets must equal the
-    // driver-computed (start, end] intervals exactly
-    val dir = java.nio.file.Files.createTempDirectory("graft_tsb").toString
-    graft.sources.Tables.events(spark, sf0001).coalesce(1)
-      .write.mode("overwrite").parquet(dir)
-    val schema = spark.read.parquet(dir).schema
-    val fmt = graft.core.RubyStrftime.DefaultRubyFormat
-    val stream = new graft.streaming.KeysetMicroBatchStream(schema,
-      graft.streaming.ParquetMode(dir),
-      "ts", maxRowsPerBatch = 300, rubyTimeFormat = fmt,
-      maxRowsPerPartition = 120)
-    val limit = org.apache.spark.sql.connector.read.streaming.ReadLimit.maxRows(300)
-    val factory = stream.createReaderFactory()
-    val idIdx = schema.fieldIndex("event_id")
+    // timestamp update column through TWO planned batches, each cut into
+    // sub-ranges: the second batch's lower bound is the serialized string
+    // of batch 1's boundary, so the database's cast must read it as the
+    // same micros the driver-side KeysetScan filter does — reader row sets
+    // must equal the driver-computed (start, end] intervals exactly
+    val url = "jdbc:derby:memory:graftr10;create=true"
+    TailHarness.stage(graft.sources.Tables.events(spark, sf0001), url, "R10_TSB")
+    // zone-less: Derby's timestamp cast rejects a zone suffix
+    val fmt = "%Y-%m-%d %H:%M:%S.%6N"
+    val stream = TailHarness.tail(url, "R10_TSB", "ts", 600, "timeFormat" -> fmt)
+    val idIdx = spark.read.jdbc(url, "R10_TSB", new java.util.Properties())
+      .schema.fieldIndex("event_id")
     def readBatch(start: org.apache.spark.sql.connector.read.streaming.Offset,
                   end: org.apache.spark.sql.connector.read.streaming.Offset): Seq[Long] =
-      stream.planInputPartitions(start, end).flatMap { p =>
-        val r = factory.createReader(p)
-        val buf = scala.collection.mutable.ArrayBuffer.empty[Long]
-        while (r.next()) buf += r.get().getLong(idIdx)
-        r.close(); buf
-      }.toSeq
+      TailHarness.read(stream, stream.planInputPartitions(start, end).toSeq)
+        .flatten.map(_.getLong(idIdx))
     def driverBatch(startLast: Option[String], endLast: String): Seq[Long] = {
-      val t = spark.read.parquet(dir)
+      val t = spark.read.jdbc(url, "R10_TSB", new java.util.Properties())
       graft.sources.KeysetScan.scan(t, "ts", startLast, limit = 0, rubyTimeFormat = fmt)
         .filter(!graft.sources.KeysetScan.lowerBound(t, "ts", endLast, fmt))
         .select("event_id").collect().map(_.getLong(0)).toSeq
     }
     val o0 = stream.initialOffset()
-    val o1 = stream.latestOffset(o0, limit)
-    val o2 = stream.latestOffset(o1, limit)
-    val k1 = o1.asInstanceOf[graft.streaming.KeysetOffset]
-    val k2 = o2.asInstanceOf[graft.streaming.KeysetOffset]
-    assert(k1.last.isDefined && k2.last.isDefined && k1 != k2)
-    assert(readBatch(o0, o1).sorted === driverBatch(None, k1.last.get).sorted)
-    assert(readBatch(o1, o2).sorted === driverBatch(k1.last, k2.last.get).sorted)
+    val o1 = TailHarness.poll(stream, o0)
+    val o2 = TailHarness.poll(stream, o1)
+    val (k1, k2) = (TailHarness.last(o1), TailHarness.last(o2))
+    assert(k1.isDefined && k2.isDefined && k1 != k2)
+    assert(stream.planInputPartitions(o0, o1).length > 1, "batch 1 should be cut")
+    assert(readBatch(o0, o1).sorted === driverBatch(None, k1.get).sorted)
+    assert(readBatch(o1, o2).sorted === driverBatch(k1, k2.get).sorted)
     // batches are disjoint and the resume loses nothing within the range
     assert(readBatch(o0, o1).toSet.intersect(readBatch(o1, o2).toSet).isEmpty)
+    stream.stop()
   }
 
   test("minhashNearDupStream per-bucket state stays at its maxBucket bound") {

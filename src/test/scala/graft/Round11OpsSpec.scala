@@ -1,20 +1,18 @@
 package graft
 
 import java.sql.DriverManager
-import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.connector.read.streaming.ReadLimit
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
 import graft.sources.Tables
-import graft.streaming.{JdbcMode, KeysetRange, KeysetMicroBatchStream, KeysetOffset, ParquetMode}
+import graft.streaming.{KeysetMultiMicroBatchStream, KeysetMultiOffset, KeysetRange}
 
-/** Round-11 guards: the JDBC read mode of the keyset-tail streaming source
-  * (the reference's actual RDBMS-tail scenario, `in_sql.rb:129-135`),
-  * constant-size driver state for `limit <= 0` polls in both front doors,
-  * the fused one-pass poll, and the fail-loud start-offset parse. */
+/** Round-11 guards: the keyset-tail streaming source over JDBC (the
+  * reference's actual RDBMS-tail scenario, `in_sql.rb:129-135`),
+  * constant-size driver state for `limit <= 0` polls, pinned offset bytes,
+  * and the fail-loud start-offset parse. */
 class Round11OpsSpec extends SparkSpecBase {
   private val url = "jdbc:derby:memory:graftdb11;create=true"
   private val noProps = new java.util.Properties()
@@ -27,38 +25,37 @@ class Round11OpsSpec extends SparkSpecBase {
 
   private val rubyFmt = graft.core.RubyStrftime.DefaultRubyFormat
 
-  test("JDBC keyset-tail offsets are byte-identical to the parquet mode on the same rows") {
-    val df = spark.range(0, 1000).selectExpr("id AS event_id", "id * 2 AS v")
-    val dir = java.nio.file.Files.createTempDirectory("r11_par").toString
-    df.coalesce(1).write.mode("overwrite").parquet(dir)
-    df.write.mode("append").jdbc(url, "R11_EVENTS", noProps)
-
-    val pq = new KeysetMicroBatchStream(spark.read.parquet(dir).schema,
-      ParquetMode(dir), "event_id", 300, rubyFmt)
-    val jdbcSchema = spark.read.jdbc(url, "R11_EVENTS", noProps).schema
-    val jd = new KeysetMicroBatchStream(jdbcSchema,
-      JdbcMode(url, "R11_EVENTS", Map.empty, fetchFirst = true),
-      "event_id", 300, rubyFmt)
-    val lim = ReadLimit.maxRows(300)
-    var (op, oj) = (pq.initialOffset(), jd.initialOffset())
-    // 4 pages (300/300/300/100) then an unchanged-offset empty poll
-    (1 to 5).foreach { _ =>
-      val (np, nj) = (pq.latestOffset(op, lim), jd.latestOffset(oj, lim))
-      assert(nj.json() === np.json(), "JDBC offset diverged from parquet offset")
-      op = np; oj = nj
-    }
-    assert(oj.asInstanceOf[KeysetOffset].last === Some("999"))
+  test("keyset-tail offset JSON keeps its bytes over BIGINT and TIMESTAMP rows") {
+    spark.range(0, 1000).selectExpr("id AS event_id", "id * 2 AS v")
+      .write.mode("append").jdbc(url, "R11_EVENTS", noProps)
+    // the offsets the single-table stream wrote before it became the
+    // multi-table stream over one table, byte for byte: 4 pages
+    // (300/300/300/100) then an unchanged-offset empty poll
+    def offsets(stream: KeysetMultiMicroBatchStream, polls: Int): Seq[String] =
+      try Iterator.iterate(stream.initialOffset())(TailHarness.poll(stream, _))
+        .take(polls + 1).map(_.json()).toSeq
+      finally stream.stop()
+    assert(offsets(TailHarness.tail(url, "R11_EVENTS", "event_id", 300), 5) === Seq(
+      """{"last":null}""", """{"last":"299"}""", """{"last":"599"}""",
+      """{"last":"899"}""", """{"last":"999"}""", """{"last":"999"}"""))
+    exec("CREATE TABLE R11_TS_OFFS (id BIGINT, created_at TIMESTAMP)")
+    (0 until 120).foreach(i => exec(s"INSERT INTO R11_TS_OFFS VALUES ($i, " +
+      f"TIMESTAMP('2024-03-01 10:${i / 60}%02d:${i % 60}%02d.${i * 7919 % 1000000}%06d'))"))
+    assert(offsets(TailHarness.tail(url, "R11_TS_OFFS", "created_at", 50,
+        "timeFormat" -> "%Y-%m-%d %H:%M:%S.%6N"), 4) === Seq(
+      """{"last":null}""", """{"last":"2024-03-01 10:00:49.388031"}""",
+      """{"last":"2024-03-01 10:01:39.783981"}""",
+      """{"last":"2024-03-01 10:01:59.942361"}""",
+      """{"last":"2024-03-01 10:01:59.942361"}"""))
   }
 
   test("JDBC sub-range partitions carry only serialized bounds; readers fetch executor-side") {
     val jdbcSchema = spark.read.jdbc(url, "R11_EVENTS", noProps).schema
-    val jd = new KeysetMicroBatchStream(jdbcSchema,
-      JdbcMode(url, "R11_EVENTS", Map.empty, fetchFirst = true),
-      "event_id", 1000, rubyFmt, maxRowsPerPartition = 250)
+    val jd = TailHarness.tail(url, "R11_EVENTS", "event_id", 1000)
     val o0 = jd.initialOffset()
-    val o1 = jd.latestOffset(o0, ReadLimit.maxRows(1000))
+    val o1 = TailHarness.poll(jd, o0)
     val parts = jd.planInputPartitions(o0, o1)
-    assert(parts.length === 4) // 1000-row page / 250 per partition
+    assert(parts.length === 2) // 1000-row page / RowsPerRange (500) per range
     parts.foreach { p =>
       val jp = p.asInstanceOf[KeysetRange]
       // serialized bound strings only — no rows, no typed payloads
@@ -67,31 +64,21 @@ class Round11OpsSpec extends SparkSpecBase {
     }
     // constant payload as the page grows 10x (drop the batch cap to compare
     // the same partition shape): bounds are strings, not row sets
-    def payload(stream: KeysetMicroBatchStream, lim: Int): Int = {
+    def payload(stream: KeysetMultiMicroBatchStream): Int = {
       val s = stream.initialOffset()
-      val e = stream.latestOffset(s, ReadLimit.maxRows(lim))
+      val e = TailHarness.poll(stream, s)
       val part = stream.planInputPartitions(s, e).head
       val bos = new java.io.ByteArrayOutputStream()
       val oos = new java.io.ObjectOutputStream(bos)
       oos.writeObject(part); oos.close(); bos.size()
     }
-    val small = payload(new KeysetMicroBatchStream(jdbcSchema,
-      JdbcMode(url, "R11_EVENTS", Map.empty, fetchFirst = true),
-      "event_id", 100, rubyFmt), 100)
-    val big = payload(new KeysetMicroBatchStream(jdbcSchema,
-      JdbcMode(url, "R11_EVENTS", Map.empty, fetchFirst = true),
-      "event_id", 1000, rubyFmt), 1000)
+    val small = payload(TailHarness.tail(url, "R11_EVENTS", "event_id", 100))
+    val big = payload(TailHarness.tail(url, "R11_EVENTS", "event_id", 1000))
     assert(big < small * 2 + 1024, s"JDBC partition payload grew with the page: $small -> $big")
     // executor-side fetch path: readers return exactly the planned batch
-    val factory = jd.createReaderFactory()
     val idIdx = jdbcSchema.fieldIndex(jdbcSchema.fields.map(_.name)
       .find(_.equalsIgnoreCase("event_id")).get)
-    val got = parts.flatMap { p =>
-      val r = factory.createReader(p)
-      val buf = scala.collection.mutable.ArrayBuffer.empty[Long]
-      while (r.next()) buf += r.get().getLong(idIdx)
-      r.close(); buf
-    }
+    val got = TailHarness.read(jd, parts.toSeq).flatten.map(_.getLong(idIdx))
     assert(got.length === 1000 && got.toSet === (0L until 1000L).toSet)
   }
 
@@ -179,99 +166,51 @@ class Round11OpsSpec extends SparkSpecBase {
     } finally q.stop()
   }
 
-  test("limit <= 0 poll: driver holds O(maxPartitionsPerBatch), never O(rows) or O(distinct)") {
+  test("limit <= 0 poll: driver holds O(partition cap) cut values, never O(rows) or O(distinct)") {
     // near-unique update column (the reference's PK default, in_sql.rb:107)
     // with the page limit DISABLED: the round-10 histogram would have put
-    // 5000 (value, count) rows on the driver; the fused percentile pass
-    // holds at most maxPartitionsPerBatch-1 cut values
-    val dir = java.nio.file.Files.createTempDirectory("r11_nolimit").toString
-    spark.range(0, 5000).selectExpr("id AS event_id", "id * 2 AS v")
-      .coalesce(2).write.mode("overwrite").parquet(dir)
-    val schema = spark.read.parquet(dir).schema
-    val stream = new KeysetMicroBatchStream(schema, ParquetMode(dir),
-      "event_id", maxRowsPerBatch = 0, rubyFmt,
-      maxRowsPerPartition = 50, maxPartitionsPerBatch = 64)
+    // 5000 (value, count) rows on the driver; the cut pass holds at most
+    // 2 x defaultParallelism values
+    TailHarness.stage(spark.range(0, 5000).selectExpr("id AS event_id", "id * 2 AS v"),
+      url, "R11_NOLIMIT")
+    val schema = spark.read.jdbc(url, "R11_NOLIMIT", noProps).schema
+    val stream = TailHarness.tail(url, "R11_NOLIMIT", "event_id", maxRowsPerBatch = 0)
     assert(stream.getDefaultReadLimit === ReadLimit.allAvailable())
     val o0 = stream.initialOffset()
     val o1 = stream.latestOffset(o0, ReadLimit.allAvailable())
-    assert(o1.asInstanceOf[KeysetOffset].last === Some("4999"))
+    assert(TailHarness.last(o1) === Some("4999"))
     val parts = stream.planInputPartitions(o0, o1)
-    // 5000/50 would want 100 partitions; the driver-state cap binds at 64
-    assert(parts.length === 64, s"expected the 64-partition cap, got ${parts.length}")
-    val factory = stream.createReaderFactory()
+    // 5000/500 would want 10 ranges; the parallelism cap binds
+    val cap = spark.sparkContext.defaultParallelism
+    assert(parts.length === math.min(cap, 10), s"expected the $cap-range cap, got ${parts.length}")
     val idIdx = schema.fieldIndex("event_id")
-    val got = parts.flatMap { p =>
-      val r = factory.createReader(p)
-      val buf = scala.collection.mutable.ArrayBuffer.empty[Long]
-      while (r.next()) buf += r.get().getLong(idIdx)
-      r.close(); buf
-    }
+    val got = TailHarness.read(stream, parts.toSeq).flatten.map(_.getLong(idIdx))
     assert(got.length === 5000 && got.toSet === (0L until 5000L).toSet)
-  }
-
-  test("one distributed pass per poll: planInputPartitions reuses latestOffset's aggregation") {
-    val dir = java.nio.file.Files.createTempDirectory("r11_fused").toString
-    spark.range(0, 2000).selectExpr("id AS event_id", "id AS v")
-      .coalesce(1).write.mode("overwrite").parquet(dir)
-    val schema = spark.read.parquet(dir).schema
-    val stream = new KeysetMicroBatchStream(schema, ParquetMode(dir),
-      "event_id", 500, rubyFmt, maxRowsPerPartition = 100)
-    val group = "r11-fused-poll"
-    val jobs = new AtomicInteger(0)
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit =
-        if (js.properties != null &&
-            group == js.properties.getProperty("spark.jobGroup.id")) jobs.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      spark.sparkContext.setJobGroup(group, "poll")
-      val o0 = stream.initialOffset()
-      val o1 = stream.latestOffset(o0, ReadLimit.maxRows(500))
-      // wait until the poll's job events land AND the count stabilizes
-      // (AQE can post several job events for the one logical aggregation)
-      val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
-      while (jobs.get() < 1 && System.nanoTime() < deadline) Thread.sleep(20)
-      var afterPoll = jobs.get()
-      var stableFor = 0
-      while (stableFor < 5 && System.nanoTime() < deadline) {
-        Thread.sleep(100)
-        if (jobs.get() == afterPoll) stableFor += 1
-        else { afterPoll = jobs.get(); stableFor = 0 }
-      }
-      assert(afterPoll >= 1, "latestOffset should run its one aggregation job")
-      val parts = stream.planInputPartitions(o0, o1)
-      assert(parts.length === 5) // 500-row page / 100 per partition
-      Thread.sleep(1000) // would catch a histogram/boundary re-scan job
-      assert(jobs.get() === afterPoll,
-        "planInputPartitions must reuse the poll's fused aggregation, not re-scan")
-    } finally {
-      spark.sparkContext.clearJobGroup()
-      spark.sparkContext.removeSparkListener(listener)
-    }
+    stream.stop()
   }
 
   test("unparseable START offset fails loudly instead of replaying from the beginning") {
-    val dir = java.nio.file.Files.createTempDirectory("r11_badstart").toString
-    Tables.events(spark, sf0001).limit(50).coalesce(1)
-      .write.mode("overwrite").parquet(dir)
-    val schema = spark.read.parquet(dir).schema
-    val stream = new KeysetMicroBatchStream(schema, ParquetMode(dir),
-      "ts", 20, rubyFmt)
+    TailHarness.stage(Tables.events(spark, sf0001).limit(50), url, "R11_BADSTART")
+    // zone-less: Derby's timestamp cast rejects a zone suffix
+    val stream = TailHarness.tail(url, "R11_BADSTART", "ts", 20,
+      "timeFormat" -> "%Y-%m-%d %H:%M:%S.%6N")
     val o0 = stream.initialOffset()
-    val o1 = stream.latestOffset(o0, ReadLimit.maxRows(20))
-    assert(o1.asInstanceOf[KeysetOffset].last.isDefined)
-    // a checkpoint written under a different timeFormat parses to null —
+    val o1 = TailHarness.poll(stream, o0)
+    assert(TailHarness.last(o1).isDefined)
+    // a checkpoint written under a different timeFormat does not parse —
     // the round-10 code silently dropped it (unbounded replay); now: error
-    val e = intercept[RuntimeException] {
-      stream.planInputPartitions(KeysetOffset(Some("not-a-timestamp")), o1)
-    }
-    assert(e.getMessage.contains("start offset"), e.getMessage)
+    val bad = TailHarness.at(Some("not-a-timestamp"))
+    val e = intercept[RuntimeException](stream.planInputPartitions(bad, o1))
+    assert(e.getMessage.contains("start offset") && e.getMessage.contains("R11_BADSTART"),
+      e.getMessage)
+    // polling from it fails the same way instead of holding the table
+    val ep = intercept[RuntimeException](TailHarness.poll(stream, bad))
+    assert(ep.getMessage.contains("start offset") && ep.getMessage.contains("R11_BADSTART"),
+      ep.getMessage)
     // the end boundary guard still fires too
-    val e2 = intercept[RuntimeException] {
-      stream.planInputPartitions(o0, KeysetOffset(Some("not-a-timestamp")))
-    }
+    val e2 = intercept[RuntimeException](stream.planInputPartitions(o0, bad))
     assert(e2.getMessage.contains("end boundary"), e2.getMessage)
+    stream.stop()
   }
 
   test("flagship loop: JDBC keyset tail -> route -> keyed upsert; a FULL replay is a no-op") {
@@ -405,12 +344,12 @@ class Round11OpsSpec extends SparkSpecBase {
     val values = Seq("", "\\n", "\\", "\"", "a\nb", "\r\n", "\\\"", "\\\\n") ++
       (1 to 200).map(_ => (1 to rnd.nextInt(12)).map(_ => alphabet(rnd.nextInt(alphabet.length))).mkString)
     values.foreach { v =>
-      val o = KeysetOffset(Some(v))
+      val o = TailHarness.at(Some(v))
       val j = o.json()
       assert(!j.contains('\n') && !j.contains('\r'), s"offset json not single-line for ${v.toList}")
-      assert(KeysetOffset.fromJson(j) === o, s"round-trip failed for ${v.toList}: $j")
+      assert(KeysetMultiOffset.fromJson(j) === o, s"round-trip failed for ${v.toList}: $j")
     }
-    assert(KeysetOffset.fromJson(KeysetOffset(None).json()) === KeysetOffset(None))
+    assert(KeysetMultiOffset.fromJson(TailHarness.at(None).json()) === TailHarness.at(None))
     // golden bytes: the offset log written by earlier checkpoints must
     // keep parsing, and new offsets must keep their exact form
     Seq(
@@ -423,11 +362,11 @@ class Round11OpsSpec extends SparkSpecBase {
       "\\\"" -> """{"last":"\\\""}""",
       "\\\\n" -> """{"last":"\\\\n"}"""
     ).foreach { case (v, golden) =>
-      assert(KeysetOffset(Some(v)).json() === golden, s"offset bytes changed for ${v.toList}")
-      assert(KeysetOffset.fromJson(golden) === KeysetOffset(Some(v)), golden)
+      assert(TailHarness.at(Some(v)).json() === golden, s"offset bytes changed for ${v.toList}")
+      assert(KeysetMultiOffset.fromJson(golden) === TailHarness.at(Some(v)), golden)
     }
-    assert(KeysetOffset(None).json() === """{"last":null}""")
-    assert(KeysetOffset.fromJson("""{"last":null}""") === KeysetOffset(None))
+    assert(TailHarness.at(None).json() === """{"last":null}""")
+    assert(KeysetMultiOffset.fromJson("""{"last":null}""") === TailHarness.at(None))
   }
 
   test("index introspection: keyset page prerequisite detectable per README.md:100-102") {
@@ -444,40 +383,33 @@ class Round11OpsSpec extends SparkSpecBase {
     assert(JdbcSource.hasIndexOn(url, "R11_NOPE", "id").getOrElse(false) === false)
   }
 
-  test("string update column: hash-sampled cuts fan out, nasty values survive the offset JSON") {
-    // percentile_approx can't sketch strings — this exercises the
-    // sampledCuts fallback (bounded hash-thinned distinct sample) AND the
-    // offset serializer against keys holding quotes/backslashes/unicode
-    val dir = java.nio.file.Files.createTempDirectory("r11_str").toString
+  test("string update column: cuts fan out, nasty values survive the offset JSON") {
+    // the cut pass over a VARCHAR update column AND the offset serializer
+    // against keys holding quotes/backslashes/unicode
     val nasty = Seq("\"quoted\"", "back\\slash", "uni·é世", "space key", "tab\tkey")
-    import spark.implicits._
     val keys = (0 until 900).map(i => f"key_$i%04d") ++ nasty.map("zz_" + _)
-    keys.zipWithIndex.map { case (k, i) => (k, i.toLong) }.toDF("k", "v")
-      .coalesce(1).write.mode("overwrite").parquet(dir)
-    val schema = spark.read.parquet(dir).schema
-    val stream = new KeysetMicroBatchStream(schema, ParquetMode(dir),
-      "k", maxRowsPerBatch = 600, rubyFmt, maxRowsPerPartition = 100)
+    exec("CREATE TABLE R11_STR (k VARCHAR(40), v BIGINT)")
+    val c = DriverManager.getConnection(url)
+    try {
+      val ps = c.prepareStatement("INSERT INTO R11_STR VALUES (?, ?)")
+      keys.zipWithIndex.foreach { case (k, i) =>
+        ps.setString(1, k); ps.setLong(2, i.toLong); ps.executeUpdate() }
+    } finally c.close()
+    val stream = TailHarness.tail(url, "R11_STR", "k", maxRowsPerBatch = 600)
     val o0 = stream.initialOffset()
-    val o1 = stream.latestOffset(o0, ReadLimit.maxRows(600))
+    val o1 = TailHarness.poll(stream, o0)
     val parts1 = stream.planInputPartitions(o0, o1)
-    assert(parts1.length > 1, "sampled cuts should fan the 600-row page out")
-    val o2 = stream.latestOffset(o1, ReadLimit.maxRows(600))
+    assert(parts1.length > 1, "cuts should fan the 600-row page out")
+    val o2 = TailHarness.poll(stream, o1)
     // the final boundary is a nasty key; it must round-trip the JSON offset
-    val k2 = o2.asInstanceOf[KeysetOffset]
-    assert(k2.last === Some("zz_uni·é世"), k2.last)
-    assert(graft.streaming.KeysetOffset.fromJson(k2.json()) === k2)
+    assert(TailHarness.last(o2) === Some("zz_uni·é世"), o2.json())
+    assert(KeysetMultiOffset.fromJson(o2.json()) === o2)
     // batch 2 planned from the replayed JSON string delivers exactly the rest
-    val replayed = stream.deserializeOffset(o1.asInstanceOf[KeysetOffset].json())
-    val factory = stream.createReaderFactory()
-    val kIdx = schema.fieldIndex("k")
-    val got = (stream.planInputPartitions(o0, o1) ++
-        stream.planInputPartitions(replayed, o2)).flatMap { p =>
-      val r = factory.createReader(p)
-      val buf = scala.collection.mutable.ArrayBuffer.empty[String]
-      while (r.next()) buf += r.get().getUTF8String(kIdx).toString
-      r.close(); buf
-    }
+    val replayed = stream.deserializeOffset(o1.json())
+    val got = TailHarness.read(stream, (stream.planInputPartitions(o0, o1) ++
+        stream.planInputPartitions(replayed, o2)).toSeq).flatten.map(_.getUTF8String(0).toString)
     assert(got.length === 905 && got.toSet === keys.toSet)
+    stream.stop()
   }
 
   test("texttiling kernel dots equal the relational explode-per-gap referee") {

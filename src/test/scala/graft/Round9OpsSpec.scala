@@ -172,25 +172,19 @@ class Round9OpsSpec extends SparkSpecBase {
   }
 
   test("keyset micro-batch fans a large page out over >1 input partition, rows fetched READER-side") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_part").toString
-    graft.sources.Tables.events(spark, sf0001).coalesce(1)
-      .write.mode("overwrite").parquet(dir)
-    val schema = spark.read.parquet(dir).schema
-    val stream = new graft.streaming.KeysetMicroBatchStream(schema,
-      graft.streaming.ParquetMode(dir),
-      "event_id", maxRowsPerBatch = 500,
-      rubyTimeFormat = graft.core.RubyStrftime.DefaultRubyFormat,
-      maxRowsPerPartition = 200)
+    val url = "jdbc:derby:memory:graftr9;create=true"
+    TailHarness.stage(graft.sources.Tables.events(spark, sf0001), url, "R9_PART")
+    val stream = TailHarness.tail(url, "R9_PART", "event_id", maxRowsPerBatch = 1000)
     val start = stream.initialOffset()
-    val end = stream.latestOffset(start,
-      org.apache.spark.sql.connector.read.streaming.ReadLimit.maxRows(500))
+    val end = TailHarness.poll(stream, start)
     val parts = stream.planInputPartitions(start, end)
-    assert(parts.length === 3) // 500-row page / 200 per partition
+    // 1000-row page / RowsPerRange (500) per range, under local[4]
+    assert(parts.length === 2)
     // ZERO row materialization on the driver: partitions carry only value
-    // bounds + file metadata + the read closure — no Row/InternalRow
-    // payloads anywhere in the partition product
+    // bounds + connection settings — no Row/InternalRow payloads anywhere
+    // in the partition product
     parts.foreach { part =>
-      val rp = part.asInstanceOf[graft.streaming.KeysetRangePartition]
+      val rp = part.asInstanceOf[graft.streaming.KeysetRange]
       rp.productIterator.foreach { f =>
         assert(!f.isInstanceOf[org.apache.spark.sql.Row])
         assert(!f.isInstanceOf[Array[_]] || !f.asInstanceOf[Array[_]]
@@ -198,27 +192,21 @@ class Round9OpsSpec extends SparkSpecBase {
       }
     }
     // the rows come from the PartitionReaders (executor-side fetch path)
-    val factory = stream.createReaderFactory()
-    val ordinal = schema.fieldIndex("event_id")
-    val perPart = parts.map { part =>
-      val r = factory.createReader(part)
-      val buf = scala.collection.mutable.ArrayBuffer.empty[Long]
-      while (r.next()) buf += r.get().getLong(ordinal)
-      r.close()
-      buf.toSeq
-    }
+    val ordinal = parts.head.asInstanceOf[graft.streaming.KeysetRange]
+      .schema.fieldIndex("event_id")
+    val perPart = TailHarness.read(stream, parts.toSeq).map(_.map(_.getLong(ordinal)))
     val ids = perPart.flatten
-    assert(ids.length === 500)
-    assert(ids.toSet === spark.read.parquet(dir)
-      .orderBy("event_id").limit(500)
+    assert(ids.length === 1000)
+    assert(ids.toSet === graft.sources.Tables.events(spark, sf0001)
+      .orderBy("event_id").limit(1000)
       .collect().map(_.getAs[Long]("event_id")).toSet)
     // value-contiguous sub-ranges: each partition's max < the next one's min
-    perPart.toSeq.sliding(2).foreach {
+    perPart.sliding(2).foreach {
       case Seq(a, b) => assert(a.max < b.min)
       case _ => ()
     }
     // offset semantics byte-identical: boundary = last row's serialized value
-    assert(end.asInstanceOf[graft.streaming.KeysetOffset].last.contains(ids.max.toString))
+    assert(TailHarness.last(end).contains(ids.max.toString))
   }
 
   test("packBinsFfd == the sequential FFD fold; no bin overfills") {

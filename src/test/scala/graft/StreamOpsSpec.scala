@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -15,16 +13,16 @@ import graft.streaming.StreamOps
   * windowed aggregations once all data is processed).
   */
 class StreamOpsSpec extends SparkSpecBase {
+  private val url = "jdbc:derby:memory:graftsops;create=true"
 
   private lazy val eventsMicro = {
-    val dir = Files.createTempDirectory("graft_sops_events").toString
-    Tables.events(spark, sf0001).coalesce(1).write.mode("overwrite").parquet(dir)
-    dir
+    TailHarness.stage(Tables.events(spark, sf0001), url, "SOPS_EVENTS")
+    "SOPS_EVENTS"
   }
 
   private def eventStream: DataFrame = spark.readStream
     .format("graft.streaming.KeysetTailProvider")
-    .option("path", eventsMicro)
+    .option("url", url).option("dbtable", eventsMicro)
     .option("updateColumn", "event_id")
     .option("maxRowsPerBatch", "400")
     .load()
@@ -242,9 +240,8 @@ class StreamOpsSpec extends SparkSpecBase {
   }
 
   private lazy val docsMicro = {
-    val dir = Files.createTempDirectory("graft_sops_docs").toString
-    Tables.documents(spark, sf0001).coalesce(1).write.mode("overwrite").parquet(dir)
-    dir
+    TailHarness.stage(Tables.documents(spark, sf0001), url, "SOPS_DOCS")
+    "SOPS_DOCS"
   }
 
   /** One doc per micro-batch: cross-document duplicate attribution in the
@@ -254,7 +251,7 @@ class StreamOpsSpec extends SparkSpecBase {
     * arrival instead of merely relying on it. */
   private def docStream: DataFrame = spark.readStream
     .format("graft.streaming.KeysetTailProvider")
-    .option("path", docsMicro)
+    .option("url", url).option("dbtable", docsMicro)
     .option("updateColumn", "doc_id")
     .option("maxRowsPerBatch", "1")
     .load()

@@ -12,18 +12,17 @@ import graft.sources.Tables
 import graft.streaming.KeysetTail
 
 class StreamingSpec extends SparkSpecBase {
+  private val url = "jdbc:derby:memory:graftstream;create=true"
 
   private lazy val eventsMicro = {
-    // keyset-tail reads raw parquet; stage the ns→µs-normalized events once
-    val dir = Files.createTempDirectory("graft_events_us").toString
-    Tables.events(spark, sf0001).coalesce(1).write.mode("overwrite").parquet(dir)
-    dir
+    TailHarness.stage(Tables.events(spark, sf0001), url, "ST_EVENTS")
+    "ST_EVENTS"
   }
 
   test("keyset-tail micro-batch source drains the table in limit-sized pages") {
     val out = spark.readStream
       .format("graft.streaming.KeysetTailProvider")
-      .option("path", eventsMicro)
+      .option("url", url).option("dbtable", eventsMicro)
       .option("updateColumn", "event_id")
       .option("maxRowsPerBatch", "300")
       .load()
@@ -41,10 +40,13 @@ class StreamingSpec extends SparkSpecBase {
   }
 
   test("timestamp update column: offsets round-trip through serialized strings") {
+    // Derby's timestamp cast rejects a zone suffix, so the table's
+    // time_format is zone-less (the config-time guard enforces it)
     val out = spark.readStream
       .format("graft.streaming.KeysetTailProvider")
-      .option("path", eventsMicro)
+      .option("url", url).option("dbtable", eventsMicro)
       .option("updateColumn", "ts")
+      .option("timeFormat", "%Y-%m-%d %H:%M:%S.%6N")
       .option("maxRowsPerBatch", "400")
       .load()
     val q = out.writeStream.format("memory").queryName("tail_ts")
@@ -59,19 +61,16 @@ class StreamingSpec extends SparkSpecBase {
     } finally q.stop()
   }
 
-  test("non-string/timestamp columns (date, decimal, binary, array) survive the tail") {
-    val dir = Files.createTempDirectory("graft_typed").toString
-    spark.sql(
+  test("non-string/timestamp columns (date, decimal, binary) survive the tail") {
+    TailHarness.stage(spark.sql(
       """SELECT id,
         |  DATE'2024-01-01' + make_interval(0,0,0,CAST(id AS INT)) AS d,
         |  CAST(id AS DECIMAL(10,2)) / 3 AS m,
-        |  encode(CAST(id AS STRING), 'UTF-8') AS payload,
-        |  array(id, id * 2) AS arr
-        |FROM range(0, 50)""".stripMargin)
-      .coalesce(1).write.mode("overwrite").parquet(dir)
+        |  encode(CAST(id AS STRING), 'UTF-8') AS payload
+        |FROM range(0, 50)""".stripMargin), url, "ST_TYPED")
     val out = spark.readStream
       .format("graft.streaming.KeysetTailProvider")
-      .option("path", dir)
+      .option("url", url).option("dbtable", "ST_TYPED")
       .option("updateColumn", "id")
       .option("maxRowsPerBatch", "20")
       .load()
@@ -82,13 +81,12 @@ class StreamingSpec extends SparkSpecBase {
       val got = spark.sql(
         """SELECT count(*) c, count(distinct id) u,
           |  sum(CAST(decode(payload, 'UTF-8') AS LONG)) pay_sum,
-          |  max(d) dmax, sum(m) msum, sum(arr[1]) arr_sum
+          |  max(d) dmax, sum(m) msum
           |FROM tail_typed""".stripMargin).collect().head
       assert(got.getLong(0) === 50 && got.getLong(1) === 50)
       assert(got.getLong(2) === (0 until 50).sum)
       assert(got.getDate(3).toString === "2024-02-19")
       assert(got.getDecimal(4).compareTo(new java.math.BigDecimal("408.333333")) === 0)
-      assert(got.getLong(5) === (0 until 50).map(_ * 2).sum)
     } finally q.stop()
   }
 
@@ -98,7 +96,7 @@ class StreamingSpec extends SparkSpecBase {
     def run(): Unit = {
       val out = spark.readStream
         .format("graft.streaming.KeysetTailProvider")
-        .option("path", eventsMicro)
+        .option("url", url).option("dbtable", eventsMicro)
         .option("updateColumn", "event_id")
         .option("maxRowsPerBatch", "250")
         .load()
@@ -116,14 +114,13 @@ class StreamingSpec extends SparkSpecBase {
 
   test("mid-stream kill + restart: resumes from the offset log, no gaps, source growth picked up") {
     // own staged table so appending growth can't disturb other tests
-    val srcDir = Files.createTempDirectory("graft_grow").toString
-    spark.range(0, 1000).selectExpr("id AS event_id", "id * 2 AS v")
-      .coalesce(1).write.mode("overwrite").parquet(srcDir)
+    TailHarness.stage(spark.range(0, 1000).selectExpr("id AS event_id", "id * 2 AS v"),
+      url, "ST_GROW")
     val ckpt = Files.createTempDirectory("graft_ckpt2").toString
     val outDir = Files.createTempDirectory("graft_sink2").toString
     def stream() = spark.readStream
       .format("graft.streaming.KeysetTailProvider")
-      .option("path", srcDir)
+      .option("url", url).option("dbtable", "ST_GROW")
       .option("updateColumn", "event_id")
       .option("maxRowsPerBatch", "100")
       .load()
@@ -141,7 +138,7 @@ class StreamingSpec extends SparkSpecBase {
     assert(sofar >= 100, s"expected at least one 100-row page, got $sofar")
     // the table keeps growing while the consumer is down (tail semantics)
     spark.range(1000, 1200).selectExpr("id AS event_id", "id * 2 AS v")
-      .coalesce(1).write.mode("append").parquet(srcDir)
+      .write.mode("append").jdbc(url, "ST_GROW", new java.util.Properties())
     val q2 = stream().writeStream.format("parquet")
       .option("path", outDir).option("checkpointLocation", ckpt)
       .trigger(Trigger.ProcessingTime(0)).start()
@@ -165,16 +162,14 @@ class StreamingSpec extends SparkSpecBase {
     // row in (start, end] — so a tie group always travels whole and a
     // crash-restart at the boundary is exactly-once with NO skipped rows:
     // the deliberate improvement over the reference, pinned here.
-    val srcDir = Files.createTempDirectory("graft_ties").toString
-    spark.createDataFrame(Seq(
+    TailHarness.stage(spark.createDataFrame(Seq(
         (10L, 1L), (20L, 2L), (21L, 2L), (22L, 2L), (30L, 3L), (40L, 4L)))
-      .toDF("id", "upd")
-      .coalesce(1).write.mode("overwrite").parquet(srcDir)
+      .toDF("id", "upd"), url, "ST_TIES")
     val ckpt = Files.createTempDirectory("graft_ckpt3").toString
     val outDir = Files.createTempDirectory("graft_sink3").toString
     def stream() = spark.readStream
       .format("graft.streaming.KeysetTailProvider")
-      .option("path", srcDir)
+      .option("url", url).option("dbtable", "ST_TIES")
       .option("updateColumn", "upd")
       .option("maxRowsPerBatch", "2")
       .load()
@@ -305,6 +300,34 @@ class RunnerSpec extends SparkSpecBase {
     assert(ids(byTag("db.run_ok")) === (1L to 50L))
     assert(ids(byTag("db.run_gone")) === (1L to 10L))
     assert(latestOffset(cp).contains("\"db.run_gone\":\"10\""), latestOffset(cp))
+  }
+
+  test("keyset-tail under AvailableNow drains to the run-start target in pages, then resumes") {
+    table("run_single", 1L to 130L)
+    val cp = Files.createTempDirectory("graft_run_single").toString
+    def runSingle(): Seq[Long] = {
+      val got = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
+      val q = spark.readStream.format("keyset-tail")
+        .option("url", cc.jdbcUrl).option("dbtable", "run_single")
+        .option("updateColumn", "id").option("maxRowsPerBatch", "40")
+        .load()
+        .writeStream
+        .foreachBatch { (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
+          b.collect().foreach(r => got.add(r.getLong(0)))
+        }
+        .option("checkpointLocation", cp)
+        .trigger(Trigger.AvailableNow()).start()
+      try assert(q.awaitTermination(120000), "an AvailableNow run must end by itself")
+      finally q.stop()
+      assert(q.exception.isEmpty, q.exception)
+      got.asScala.toSeq.sorted
+    }
+    // each run pages through everything present at its start (40-row
+    // pages), not one page per run
+    assert(runSingle() === (1L to 130L))
+    insert("run_single", 131L to 150L)
+    assert(runSingle() === (131L to 150L))
+    assert(runSingle().isEmpty)
   }
 
   test("select_limit <= 0: one AvailableNow batch per run, tie groups whole") {

@@ -18,10 +18,10 @@ import java.util.logging.Logger
   *   - `ConnectionConfig` emits its PG property set — `currentSchema`,
   *     `SET search_path TO …` sessionInit, `connectTimeout`/`loginTimeout`
   *     in SECONDS — all consumed or recorded here;
-  *   - LIMIT-style paging (`fetchFirst = false`, the PG default in
-  *     `KeysetTail`/`keysetPage`) is translated to Derby's
-  *     `FETCH FIRST n ROWS ONLY` at execute time, so the LIMIT branch of
-  *     the page SQL is what actually runs;
+  *   - LIMIT-style paging (`fetchFirst = false`, the keyset tail's choice
+  *     for a PG URL) is translated to Derby's `FETCH FIRST n ROWS ONLY` at
+  *     execute time, so the LIMIT branch of the page SQL is what actually
+  *     runs (and is recorded in [[PgShimDriver.limitStatements]]);
   *   - round 13: the shim emulates PostgreSQL's ABORT-ON-ERROR transaction
   *     semantics — once a statement fails inside a non-autocommit
   *     transaction, every subsequent statement fails with SQLState `25P02`
@@ -81,6 +81,9 @@ object PgShimDriver {
     * `fetchsize` reader option reaches the driver (pgjdbc needs it > 0 plus
     * autocommit off to switch from materialize-all to cursor paging). */
   @volatile var lastFetchSize: Option[Int] = None
+  /** Every statement that arrived with a `LIMIT n` clause, as sent — the
+    * spec's evidence that the LIMIT branch of the page SQL ran. */
+  val limitStatements = new java.util.concurrent.ConcurrentLinkedQueue[String]()
 
   private lazy val registered: Unit =
     DriverManager.registerDriver(new PgShimDriver)
@@ -91,7 +94,10 @@ object PgShimDriver {
 
   private[testdb] def translate(sql: String): String = sql match {
     case SearchPath(path) => s"SET SCHEMA ${path.split(",")(0).trim}"
-    case _ => sql.replaceAll("(?i)\\bLIMIT\\s+(\\d+)\\b", "FETCH FIRST $1 ROWS ONLY")
+    case _ =>
+      val t = sql.replaceAll("(?i)\\bLIMIT\\s+(\\d+)\\b", "FETCH FIRST $1 ROWS ONLY")
+      if (t != sql) limitStatements.add(sql)
+      t
   }
 
   /** PostgreSQL transaction-abort state, shared by a connection and every
